@@ -15,6 +15,7 @@ measured time covers the real operator work, not result transfer).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -222,6 +223,17 @@ def materialize(df) -> int:
     ).collect()[0][0]
 
 
+def prefault(d: str) -> None:
+    """Pre-read the target fixture's bytes into the OS page cache so timed
+    reps measure plan execution, not first-touch disk IO — a fresh VM's
+    first sf0.1 scan measured 2-3x slower across EVERY query, and even
+    min-of-N can't fully hide cold reads that span reps."""
+    for path in glob.glob(os.path.join(d, "*.parquet")):
+        with open(path, "rb") as f:
+            while f.read(1 << 22):
+                pass
+
+
 # Fixed calibration probes (round-15 verdict item 2): the same-code bench
 # total swings with HOST speed (r14 measured 67.6-78.1 s across three
 # identical runs; the r13->r14 artifact moved 1.17x on untouched queries),
@@ -285,19 +297,6 @@ def main() -> None:
             materialize(registry[name](spark, warm_sf))
         except Exception:
             pass
-
-    def prefault(d: str) -> None:
-        """Pre-read the target fixture's bytes into the OS page cache so
-        timed reps measure plan execution, not first-touch disk IO — a
-        fresh VM's first sf0.1 scan measured 2-3x slower across EVERY
-        query (round-5 triage), and even min-of-N can't fully hide cold
-        reads that span reps."""
-        import glob as _glob
-
-        for path in _glob.glob(os.path.join(d, "*.parquet")):
-            with open(path, "rb") as f:
-                while f.read(1 << 22):
-                    pass
 
     prefault(sf_dir)
     cal_start = _calibrate(spark, sf_dir)

@@ -123,9 +123,9 @@ def test_dlit_non_finite_and_edge_doubles_roundtrip(spark):
 def test_corpus_dim_ignores_degenerate_first_row(spark, corrupt_dir):
     """The LSH dim must be the corpus max, not whatever row first()
     happens to scan — with the short 3-dim row FIRST in file order the
-    planes must still build at the full dimension."""
+    planes must still build at the full dimension. A fresh session has an
+    empty memo, so the dimension is computed here, not recalled."""
     from transf_spark.operators import similarity as S
 
-    S._DIM_CACHE.clear()
-    d = S._corpus_dim(spark, corrupt_dir)
+    d = S._corpus_dim(spark.newSession(), corrupt_dir)
     assert d > 3, f"corpus dim collapsed to the corrupt row's {d}"

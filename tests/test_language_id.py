@@ -131,26 +131,41 @@ def test_fixtures_are_bmp_only_tripwire(spark):
         )
 
 
-def test_distributed_profile_fallback_identical(spark, monkeypatch):
-    """Round-16 (r15 verdict item 4): above LANG_ID_GRID_MAX_CELLS the
-    collected literal grid is abandoned for the fully distributed profile
-    aggregate. The two branches share the identical Spark-side
-    log/quantize expression, so every (doc_id, predicted_lang, score) row
-    must be bit-identical — forcing the fallback with a cap of 0 and
-    comparing against the literal-grid output proves it."""
+def test_distributed_profile_fallback_identical(spark, monkeypatch, tmp_path):
+    """Above LANG_ID_GRID_MAX_CELLS the collected literal grid is abandoned
+    for the fully distributed profile aggregate. The two branches share
+    the identical Spark-side log/quantize expression, so every
+    (doc_id, predicted_lang, score) row must be bit-identical — forcing
+    the fallback with a cap of 0 and comparing against the literal-grid
+    output proves it. Second case: training docs with NULL lang, which the
+    literal grid profiles as their own candidate — a null-unsafe lang join
+    in the fallback floors every score of that candidate."""
+    from tests.docfixtures import write_documents
     from transf_spark.operators import text as text_mod
 
-    base = sorted(
-        (
-            (r["doc_id"], r["predicted_lang"], r["score"])
-            for r in language_id_predictions(spark, SF).collect()
-        )
+    null_lang = write_documents(
+        str(tmp_path),
+        [
+            (1, "hello there, hello world", "en", "s"),
+            (2, "zzyzx zzyzx zzyzx", None, "s"),
+            (3, "zzyzx and more zzyzx", None, "s"),
+            (4, "the world says hello", "en", "s"),
+        ],
     )
-    monkeypatch.setattr(text_mod, "LANG_ID_GRID_MAX_CELLS", 0)
-    fb = sorted(
-        (
-            (r["doc_id"], r["predicted_lang"], r["score"])
-            for r in language_id_predictions(spark, SF).collect()
+
+    def rows(sf_dir):
+        return sorted(
+            (
+                (r["doc_id"], r["predicted_lang"], r["score"])
+                for r in language_id_predictions(spark, sf_dir).collect()
+            ),
+            key=repr,
         )
-    )
-    assert fb == base, "distributed fallback diverged from the literal grid"
+
+    for sf_dir in (SF, null_lang):
+        base = rows(sf_dir)
+        with monkeypatch.context() as m:
+            m.setattr(text_mod, "LANG_ID_GRID_MAX_CELLS", 0)
+            fb = rows(sf_dir)
+        assert fb == base, f"{sf_dir}: distributed fallback diverged from the literal grid"
+    assert (2, None) in {(d, lang) for d, lang, _ in base}, "NULL lang not exercised"

@@ -26,25 +26,9 @@ def _oracle_cases():
     return sorted(oracles.keys())
 
 
-def _pending_oracle_cases():
-    """Pre-staged (M8) queries are parity-gated EXACTLY like live ones —
-    promotion to the driver registry must be a one-word change, not a
-    debugging session."""
-    q._load_all_modules()
-    return sorted(n for n, s in q.PENDING_REGISTRY.items() if s.oracle is not None)
-
-
 @pytest.mark.parametrize("name", _oracle_cases())
 def test_query_matches_oracle(spark, con, name):
     spec = q.REGISTRY[name]
-    df = spec.fn(spark, SF)
-    problems = compare(df, con, spec.oracle)
-    assert not problems, f"{name}: " + "; ".join(problems)
-
-
-@pytest.mark.parametrize("name", _pending_oracle_cases())
-def test_pending_query_matches_oracle(spark, con, name):
-    spec = q.PENDING_REGISTRY[name]
     df = spec.fn(spark, SF)
     problems = compare(df, con, spec.oracle)
     assert not problems, f"{name}: " + "; ".join(problems)
@@ -106,19 +90,10 @@ def test_survey_inventory_matches_registry():
     assert oracled == len(q.oracle_sql())
     assert rows_only == total - oracled
     sec = text.split("### 2.B", 1)[1].split("declared queries —", 1)[0]
-    rows = re.findall(r"^\| `([a-z0-9_]+)`(.*)$", sec, re.M)
-    table_live = {n for n, rest in rows if "PRE-STAGED" not in rest}
-    table_pending = {n for n, rest in rows if "PRE-STAGED" in rest}
-    assert table_live == set(q.queries()), (
-        f"missing from table: {set(q.queries()) - table_live}; "
-        f"stale in table: {table_live - set(q.queries())}"
-    )
-    # pre-staged rows must track PENDING_REGISTRY the same way — a
-    # promoted query keeps its row but must lose the PRE-STAGED marker
-    q._load_all_modules()
-    assert table_pending == set(q.PENDING_REGISTRY), (
-        f"missing pending rows: {set(q.PENDING_REGISTRY) - table_pending}; "
-        f"stale PRE-STAGED markers: {table_pending - set(q.PENDING_REGISTRY)}"
+    table = set(re.findall(r"^\| `([a-z0-9_]+)`", sec, re.M))
+    assert table == set(q.queries()), (
+        f"missing from table: {set(q.queries()) - table}; "
+        f"stale in table: {table - set(q.queries())}"
     )
 
 

@@ -1168,13 +1168,6 @@ def test_priority_shipping_single_join_exchange(spark):
     assert "l_shipdate" in pushed and "l_returnflag" in pushed
 
 
-def _qp(spark, name):
-    """Pending (M8 pre-staged) queries — gated before promotion."""
-    from transf_spark.queries import all_specs
-
-    return all_specs()[name].fn(spark, SF)
-
-
 def test_forecast_revenue_single_pass_scan(spark):
     """Q6 shape: the entire query is one pruned scan + one 1-row
     aggregate — all three predicates reach the parquet scan, exactly the
@@ -1200,7 +1193,7 @@ def test_min_cost_supplier_broadcasts_and_reaggregates(spark):
     scan. Exchanges: the (part,supplier) unit-cost aggregate, its
     p_partkey re-aggregate, and the final hop — 3, never fact×dimension
     sort-merges."""
-    df = _qp(spark, "sql_min_cost_supplier")
+    df = _q(spark, "sql_min_cost_supplier")
     st = plan_stats(df)
     assert st.broadcast_joins >= 2
     assert st.sort_merge_joins == 0 and st.nested_loop_joins == 0
@@ -1215,7 +1208,7 @@ def test_promotable_parts_semi_join_shape(spark):
     one merge join of two supplier-cardinality relations (AQE converts
     it to broadcast at runtime when the aggregate domain is small), and
     the fact shuffles exactly once."""
-    df = _qp(spark, "sql_promotable_parts")
+    df = _q(spark, "sql_promotable_parts")
     st = plan_stats(df)
     assert st.broadcast_joins >= 1
     assert st.nested_loop_joins == 0
@@ -1231,7 +1224,7 @@ def test_theta_setops_bounded_pair_plan(spark):
     the ONE permitted nested-loop join (a broadcast of a ≤|segments|-row
     side — bounded by design, like the scalar crossJoins elsewhere), and
     the events scan reads exactly two columns."""
-    df = _qp(spark, "agg_theta_sketch_setops")
+    df = _q(spark, "agg_theta_sketch_setops")
     st = plan_stats(df)
     assert st.sort_merge_joins == 0
     assert st.nested_loop_joins <= 1
@@ -1246,7 +1239,7 @@ def test_kll_quantile_two_exchange_broadcast(spark):
     the hour key (never a shuffle of the fact against the window table)
     and reduces in one more bounded aggregate. Scan reads (ts, value)
     only."""
-    df = _qp(spark, "stream_kll_quantile_sketch")
+    df = _q(spark, "stream_kll_quantile_sketch")
     st = plan_stats(df)
     assert st.exchanges == 2
     assert st.broadcast_joins == 1
@@ -1258,7 +1251,7 @@ def test_audio_decode_is_pure_map(spark):
     """WAV decode: synthesis + decode are map stages — ZERO exchanges,
     scan pruned to (doc_id, text), NULL-text filter pushed. The
     multimodal_image_decode gate, applied to its audio twin."""
-    df = _qp(spark, "multimodal_audio_decode")
+    df = _q(spark, "multimodal_audio_decode")
     st = plan_stats(df)
     assert st.exchanges == 0
     assert st.broadcast_joins + st.sort_merge_joins + st.nested_loop_joins == 0
@@ -1271,7 +1264,7 @@ def test_bitmap_sparse_dictionary_pass_plan(spark):
     rank window + dictionary join + two word aggregates — 4 exchanges on
     id/segment keys, never a global window or a nested loop; the events
     scan reads exactly (event_type, user_id)."""
-    df = _qp(spark, "agg_bitmap_distinct_sparse")
+    df = _q(spark, "agg_bitmap_distinct_sparse")
     st = plan_stats(df)
     assert st.exchanges <= 4
     assert st.sort_merge_joins == 0 and st.nested_loop_joins == 0
@@ -1284,7 +1277,7 @@ def test_variant_shred_fused_map_single_aggregate(spark):
     the scan stage as map expressions — ONE exchange (the census
     aggregate over the ≤|statuses| domain), no joins, scan pruned to the
     six referenced order columns."""
-    df = _qp(spark, "scalar_variant_shred")
+    df = _q(spark, "scalar_variant_shred")
     st = plan_stats(df)
     assert st.exchanges == 1
     assert st.broadcast_joins + st.sort_merge_joins + st.nested_loop_joins == 0
@@ -1298,7 +1291,7 @@ def test_variant_shred_fused_map_single_aggregate(spark):
 def test_python_datasource_single_aggregate(spark):
     """Custom Python source: partition-parallel generation feeding ONE
     census exchange — no joins, no extra shuffles around the Python scan."""
-    df = _qp(spark, "scan_python_datasource")
+    df = _q(spark, "scan_python_datasource")
     st = plan_stats(df)
     assert st.exchanges == 1
     assert st.broadcast_joins + st.sort_merge_joins + st.nested_loop_joins == 0
@@ -1310,7 +1303,7 @@ def test_xml_roundtrip_single_census_exchange(spark):
     documented format tax — so the gate pins what IS controllable: the
     staged scan feeds exactly ONE census exchange and no join of any
     kind appears around the format conversion."""
-    df = _qp(spark, "scan_xml_roundtrip")
+    df = _q(spark, "scan_xml_roundtrip")
     st = plan_stats(df)
     assert st.exchanges == 1
     assert st.broadcast_joins + st.sort_merge_joins + st.nested_loop_joins == 0
@@ -1321,7 +1314,7 @@ def test_avro_roundtrip_single_census_exchange(spark):
     feeding exactly ONE census exchange, no joins — same controllable
     shape as the XML and Python-DataSource gates (the scan itself has no
     pruning, the documented connector tax)."""
-    df = _qp(spark, "scan_avro_roundtrip")
+    df = _q(spark, "scan_avro_roundtrip")
     st = plan_stats(df)
     assert st.exchanges == 1
     assert st.broadcast_joins + st.sort_merge_joins + st.nested_loop_joins == 0

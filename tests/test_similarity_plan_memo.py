@@ -1,5 +1,5 @@
-"""Round-16: lazy-plan memo for the similarity module's shared input
-subtrees (_emb_double / _bucketed — the load_table _PLAN_CACHE device).
+"""Lazy-plan memo for the similarity module's shared input subtrees
+(_emb_double / _bucketed — the same transf_spark.memo device as load_table).
 One similarity_ann_lsh plan build measured ~0.95 s of py4j round trips,
 a third of the query's bench time; the memo returns the SAME lazy plan
 for identical (session, fixture fingerprint, args). These pin the memo's

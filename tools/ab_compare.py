@@ -19,7 +19,6 @@ Output JSON: {"queries": {name: min_sec}, "pass_totals": [...],
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import sys
@@ -31,21 +30,22 @@ if _REPO not in sys.path:
 
 from pyspark.sql import functions as F
 
+from bench import (
+    CAL_RANGE_ANCHOR_SEC,
+    CAL_RANGE_ROWS,
+    _serving_surfaces,
+    materialize,
+    prefault,
+)
 from transf_spark import queries as q
 from transf_spark.session import get_spark
-
-
-def materialize(df) -> int:
-    return df.select(
-        F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h")
-    ).collect()[0][0]
 
 
 def calibrate(spark, reps: int = 3) -> float:
     best = float("inf")
     for _ in range(reps):
         t0 = time.perf_counter()
-        spark.range(5_000_000_000).select(F.sum(F.xxhash64("id")).alias("h")).collect()
+        spark.range(CAL_RANGE_ROWS).select(F.sum(F.xxhash64("id")).alias("h")).collect()
         best = min(best, time.perf_counter() - t0)
     return round(best, 4)
 
@@ -59,18 +59,13 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("transf_spark_ab")
-    import bench as _b  # reuse the serving-surface registry
-
-    registry = {**q.queries(), **_b._serving_surfaces()}
+    registry = {**q.queries(), **_serving_surfaces()}
     missing = [n for n in args.names if n not in registry]
     if missing:
         raise SystemExit(f"unknown queries: {missing}")
 
     # page-cache prefault + warmup (bench.py protocol)
-    for path in glob.glob(os.path.join(args.sf, "*.parquet")):
-        with open(path, "rb") as f:
-            while f.read(1 << 22):
-                pass
+    prefault(args.sf)
     for n in args.names:
         try:
             materialize(registry[n](spark, "/root/testdata/sf0.001"))
@@ -97,7 +92,7 @@ def main() -> None:
         "calibration": {
             "range_start_sec": cal_start,
             "range_end_sec": cal_end,
-            "range_anchor_sec": 0.749,  # bench.py CAL_RANGE_ANCHOR_SEC (r15)
+            "range_anchor_sec": CAL_RANGE_ANCHOR_SEC,
         },
         "reps": args.reps,
         "agg": "min",

@@ -29,14 +29,9 @@ if _REPO not in sys.path:
 
 from pyspark.sql import functions as F
 
+from bench import HEADLINE, _serving_surfaces, materialize, prefault
 from transf_spark import queries as q
 from transf_spark.session import get_spark
-
-
-def materialize(df) -> int:
-    return df.select(
-        F.sum(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h")
-    ).collect()[0][0]
 
 
 def plan_text(df) -> str:
@@ -68,13 +63,11 @@ def main() -> None:
     reps = int(os.environ.get("PROFILE_REPS", "3"))
     spark = get_spark("transf_spark_profile")
 
-    import bench as _bench
-
-    registry = {**q.queries(), **_bench._serving_surfaces()}
+    registry = {**q.queries(), **_serving_surfaces()}
     if len(sys.argv) > 2:
         names = [s for s in sys.argv[2].split(",") if s]
     else:
-        names = [n for n in _bench.HEADLINE if n in registry]
+        names = [n for n in HEADLINE if n in registry]
 
     # Warmup at sf0.001 exactly like bench.py so codegen caches are hot.
     spark.range(1_000_000).select(F.sum("id")).collect()
@@ -83,11 +76,7 @@ def main() -> None:
             materialize(registry[name](spark, "/root/testdata/sf0.001"))
         except Exception:
             pass
-    import glob
-    for path in glob.glob(os.path.join(sf_dir, "*.parquet")):
-        with open(path, "rb") as f:
-            while f.read(1 << 22):
-                pass
+    prefault(sf_dir)
 
     rows = []
     for name in names:

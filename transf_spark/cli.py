@@ -38,21 +38,17 @@ def _spark(cpus: int | None = None):
 
 
 def cmd_list(_args) -> int:
-    from transf_spark.queries import PENDING_REGISTRY, all_specs
+    from transf_spark.queries import all_specs
 
     specs = all_specs()
     width = max(len(n) for n in specs)
     for name, spec in sorted(specs.items()):
         check = "oracle" if spec.oracle else "rows-only"
-        tag = "  [pending]" if name in PENDING_REGISTRY else ""
-        print(f"{name:<{width}}  {spec.category:<22} {spec.origin:<10} {check}{tag}")
+        print(f"{name:<{width}}  {spec.category:<22} {spec.origin:<10} {check}")
     return 0
 
 
 def _resolve(name: str):
-    # all_specs = live + pre-staged: a user may drive a pending query by
-    # name before its grading-window slot opens (the driver surfaces in
-    # __spark_entry__.py still expose only the live registry)
     from transf_spark.queries import all_specs
 
     specs = all_specs()
@@ -88,9 +84,6 @@ def cmd_explain(args) -> int:
 
 
 def cmd_oracle(args) -> int:
-    # all_specs: a pending query's oracle must be comparable too — the
-    # live-only oracle_sql() here silently reported every pre-staged
-    # query as rows-only and exited 0 (round-9 review finding)
     from transf_spark.queries import all_specs
 
     spec = all_specs().get(args.name)

@@ -30,57 +30,45 @@ probability ≳ 1-3e-6 per pair at the 0.8 threshold — see dedup.py).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from transf_spark.memo import memo
 from transf_spark.operators.dedup import (
     _SHINGLES_SQL,
     JACCARD_THRESHOLD,
     dedup_fuzzy_minhash,
 )
 from transf_spark.queries import register
-from transf_spark.sources.tables import load_table
+from transf_spark.sources.tables import load_table, staging_tag
 
 _MAX_ROUNDS = 16  # pointer jumping: 2^16 ≫ any real component diameter
 
-# Minhash candidate-pair set, localCheckpoint'd once per (application, sf_dir):
-# the driver grades `dedup_fuzzy_minhash` and `dedup_cluster_cc` as separate
-# queries — without the cache the CC query re-runs the whole LSH pipeline
-# (round-2 judge finding). Keyed by applicationId because checkpointed RDD
-# blocks die with their SparkContext; entries from OTHER applicationIds are
-# evicted on every key computation, so a long-lived process that cycles
-# SparkSessions never accumulates DataFrame handles for stopped contexts
-# (round-3 ADVICE).
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    # applicationId: checkpointed RDD blocks die with their SparkContext;
-    # staging_tag: fingerprints the documents parquet so an in-place fixture
-    # regeneration can't replay a stale graph (same device as /tmp staging).
-    from transf_spark.sources.tables import staging_tag
-
-    app = spark.sparkContext.applicationId
-    tag = staging_tag(sf_dir, "documents")
-    for cache in (_PAIR_CACHE, _CC_CACHE):
-        # dead applicationIds AND same-app stale fingerprints: an in-place
-        # fixture regeneration changes the tag, and without this sweep the
-        # old entry's checkpointed RDD blocks stay pinned in executor
-        # storage for the application's lifetime (_TS_UNIT_CACHE precedent)
-        for dead in [k for k in cache if k[0] != app or k[1] != tag]:
-            del cache[dead]
-    return (app, tag)
+def _cc_memo(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
+    """This module's memo contract: key ``(name, abspath(sf_dir))``,
+    fingerprint ``staging_tag`` of the documents parquet.
+    ``dedup_fuzzy_minhash`` and ``dedup_cluster_cc`` run as separate
+    queries; without the memo the CC query re-runs the whole LSH
+    pipeline."""
+    return memo(
+        spark,
+        (name, os.path.abspath(sf_dir)),
+        staging_tag(sf_dir, "documents"),
+        build,
+    )
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _cache_key(spark, sf_dir)
-    if key not in _PAIR_CACHE:
-        _PAIR_CACHE[key] = (
-            dedup_fuzzy_minhash(spark, sf_dir)
-            .select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-            .localCheckpoint(eager=True)
-        )
-    return _PAIR_CACHE[key]
+    """The minhash candidate-pair set, localCheckpoint'd once, memoized."""
+    return _cc_memo(
+        spark,
+        "minhash_pairs",
+        sf_dir,
+        lambda: dedup_fuzzy_minhash(spark, sf_dir)
+        .select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
+        .localCheckpoint(eager=True),
+    )
 
 
 def _connected_components(edges: DataFrame) -> DataFrame:
@@ -182,14 +170,16 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Iterate only over the pair subgraph (tiny vs corpus); singletons take
     # their identity label through the left join — no corpus rows enter the
     # loop, which is the property that keeps this viable at 100 TB. The
-    # labeled subgraph is cached like the pair set: the loop's answer is a
-    # pure function of the (already content-stable) fixture.
-    key = _cache_key(spark, sf_dir)
-    if key not in _CC_CACHE:
-        _CC_CACHE[key] = _connected_components(
+    # labeled subgraph is memoized like the pair set: the loop's answer is
+    # a pure function of the fixture.
+    sub = _cc_memo(
+        spark,
+        "cc_labels",
+        sf_dir,
+        lambda: _connected_components(
             _minhash_pairs(spark, sf_dir)
-        ).localCheckpoint(eager=True)
-    sub = _CC_CACHE[key]
+        ).localCheckpoint(eager=True),
+    )
     lab = (
         docs.select(F.col("doc_id").alias("node"))
         .join(sub, "node", "left")

@@ -21,15 +21,16 @@ fixture embeddings are float32 → double widening is exact.
 
 from __future__ import annotations
 
-import weakref
+import os
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from transf_spark.memo import memo
 from transf_spark.queries import register
-from transf_spark.sources.tables import load_table
+from transf_spark.sources.tables import load_table, staging_tag
 
 TOP_K = 10
 NEAR_DUP_COS = 0.45  # fixture max pairwise cosine ≈ 0.51 — a few true pairs
@@ -304,44 +305,27 @@ _UNIFORM_EMB_SQL = (
 )
 
 
-# Per-session lazy-PLAN memo for this module's shared input subtrees —
-# the r15 `load_table` device (sources/tables.py:_PLAN_CACHE) applied to
-# the similarity family's hot build paths. Round-16 measurement
-# (cProfile, warm session): ONE similarity_ann_lsh plan build costs
-# ~0.95 s of py4j round trips (2231 commands) + repeated JVM re-analysis,
-# ~37% of the query's whole bench time at sf0.1 — and the dominant
-# subtrees (_emb_double, _bucketed) are pure functions of
-# (session, fixture fingerprint, args) rebuilt identically on every
-# call. Caching the PLAN is not caching data or results: the DataFrame
-# holds expressions over the (already plan-memoized) parquet scan;
-# every action still scans parquet. Keys carry staging_tag's
-# (mtime_ns, size) fingerprint, so a regenerated fixture invalidates.
-# Self-join safety: consumers already join derived frames that share
-# the memoized load_table SCAN object (e.g. the census's bucketed ⋈
-# probes), which Spark's DeduplicateRelations re-aliases — this memo
-# adds no new sharing class; the similarity edge/oracle sweeps re-ran
-# green on top of it.
-_SUBTREE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _subtree_memo(spark: SparkSession, key: tuple, build) -> DataFrame:
-    per_session = _SUBTREE_CACHE.setdefault(spark, {})
-    if key not in per_session:
-        per_session[key] = build()
-    return per_session[key]
+def _sim_memo(spark: SparkSession, name: str, sf_dir: str, args: tuple, build):
+    """This module's memo contract: key ``(name, abspath(sf_dir), *args)``,
+    fingerprint ``staging_tag`` of the embeddings parquet."""
+    return memo(
+        spark,
+        (name, os.path.abspath(sf_dir), *args),
+        staging_tag(sf_dir, "embeddings"),
+        build,
+    )
 
 
 def _emb_double(spark: SparkSession, sf_dir: str, uniform: bool = False) -> DataFrame:
     """Embeddings widened to double — the module's shared input contract
     (see _VALID_EMB_SQL above; ``uniform=True`` adds the pairwise tier's
     max-dimension filter, _UNIFORM_EMB_SQL). Every oracle mirrors the
-    same predicate. Lazy plan memoized per (session, fixture, uniform) —
-    see _SUBTREE_CACHE."""
-    from transf_spark.sources.tables import staging_tag
+    same predicate.
 
-    key = ("emb_double", staging_tag(sf_dir, "embeddings"), uniform)
+    The lazy plan is memoized (see _sim_memo): one similarity_ann_lsh
+    build measured ~0.95 s of py4j round trips, ~37% of its bench time at
+    sf0.1, rebuilding this and _bucketed identically on every call. The
+    memo holds the plan, never rows — every action re-scans parquet."""
 
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -354,7 +338,7 @@ def _emb_double(spark: SparkSession, sf_dir: str, uniform: bool = False) -> Data
             out = out.filter(F.size("v") == F.lit(_corpus_dim(spark, sf_dir)))
         return out
 
-    return _subtree_memo(spark, key, build)
+    return _sim_memo(spark, "emb_double", sf_dir, (uniform,), build)
 
 
 @register(
@@ -621,34 +605,23 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_PLANES = 8  # 256 buckets — sized so buckets stay populated at test scale
 
-# seeded hyperplanes per observed dimension + corpus-dim cache per fixture
-# fingerprint (one bounded first() per fixture, same class as the IVF
-# centroid cache)
-_PLANE_CACHE: dict[int, list] = {}
-_DIM_CACHE: dict[str, int] = {}
-
 
 def _corpus_dim(spark: SparkSession, sf_dir: str) -> int:
-    from transf_spark.sources.tables import staging_tag
+    """The corpus's uniform embedding dimension: MAX over the valid
+    vectors, not first() — one degenerate short first row would otherwise
+    build the planes at the wrong dimension and NULL-fold the whole
+    full-dim corpus into bucket 0. Corrupt SHORTER vectors then NULL-fold
+    only themselves out of the index. 0 means zero valid embeddings (an
+    all-NULL degenerate fixture): callers short-circuit to empty top-k
+    surfaces. One bounded 1-row aggregate, memoized (see _sim_memo)."""
 
-    key = staging_tag(sf_dir, "embeddings")
-    if key not in _DIM_CACHE:
-        # MAX over the corpus, not first() (round-13 review): a single
-        # degenerate short first row would otherwise build the planes at
-        # the wrong dimension and NULL-fold the whole full-dim corpus
-        # into bucket 0 — the exact round-5 collapse the data-derived
-        # dim exists to prevent. One bounded 1-row aggregate per fixture
-        # fingerprint; corrupt SHORTER vectors then NULL-fold only
-        # THEMSELVES out of the index (graceful per-row degradation).
+    def build() -> int:
         row = _emb_double(spark, sf_dir).agg(F.max(F.size("v")).alias("d")).first()
         if row is None or row["d"] is None or row["d"] <= 0:
-            # zero valid embeddings (all-NULL degenerate regeneration) — a
-            # legitimate empty corpus, not an error: callers short-circuit
-            # to empty top-k surfaces (round-9 advisory). NOT cached: a
-            # later re-stage of the same dir may carry vectors.
             return 0
-        _DIM_CACHE[key] = int(row["d"])
-    return _DIM_CACHE[key]
+        return int(row["d"])
+
+    return _sim_memo(spark, "corpus_dim", sf_dir, (), build)
 
 
 def _dlit(x) -> str:
@@ -694,11 +667,7 @@ def _planes_for_dim(dim: int) -> list:
     whole corpus silently collapses into bucket 0 — the '14% of the data'
     scale path degrades to a 100% brute-force scan with recall 1.0, so no
     recall gate would ever fire."""
-    if dim not in _PLANE_CACHE:
-        _PLANE_CACHE[dim] = (
-            np.random.RandomState(42).normal(size=(N_PLANES, dim)).tolist()
-        )
-    return _PLANE_CACHE[dim]
+    return np.random.RandomState(42).normal(size=(N_PLANES, dim)).tolist()
 
 
 LSH_ASSIGN_FLIPS = 2  # corpus-side redundant indexing (round-11, the IVF
@@ -735,20 +704,15 @@ def _bucketed(
     (plane indices by ascending |dot|), so the caller can fan probes out
     over the vector's own least-confident planes.
 
-    Lazy plan memoized per (session, fixture, flips, with_margins) — see
-    _SUBTREE_CACHE: one census build calls this 2×, and the withColumn
-    chain re-analyzes the growing plan each call (round-16 cProfile:
-    0.31 s of the lsh build's 1.2 s driver cost)."""
-    from transf_spark.sources.tables import staging_tag
-
-    key = (
+    Lazy plan memoized (see _sim_memo): one census build calls this 2×,
+    and the withColumn chain re-analyzes the growing plan each call
+    (0.31 s of the lsh build's 1.2 s plan-build cost)."""
+    return _sim_memo(
+        spark,
         "bucketed",
-        staging_tag(sf_dir, "embeddings"),
-        flips,
-        with_margins,
-    )
-    return _subtree_memo(
-        spark, key, lambda: _bucketed_build(spark, sf_dir, flips, with_margins)
+        sf_dir,
+        (flips, with_margins),
+        lambda: _bucketed_build(spark, sf_dir, flips, with_margins),
     )
 
 
@@ -907,29 +871,24 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANN_LSH_RECALL_FLOOR = 0.35
 
 
-# Sampled brute-force recall baseline, cached per (applicationId,
-# fixture fingerprint) like _IVF_CENTROIDS (round-13 review): BOTH ANN
-# censuses run every driver/bench round and each rebuilt the identical
-# heaviest similarity scan (ANN_RECALL_SAMPLE × corpus cosines). The
-# result is a BOUNDED sample × TOP_K (q_id, nn_id) set — a model-sized
-# driver collect, not data.
-_BF_BASELINE: dict[tuple[str, str], list] = {}
-
-
 def _bf_baseline_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _ivf_cache_key(spark, sf_dir)
-    for dead in [k for k in _BF_BASELINE if k[0] != key[0]]:
-        del _BF_BASELINE[dead]
-    if key not in _BF_BASELINE:
-        _BF_BASELINE[key] = [
+    """Sampled brute-force recall baseline, memoized (see _sim_memo): BOTH
+    ANN censuses need it, and it is the heaviest similarity scan
+    (ANN_RECALL_SAMPLE × corpus cosines). The memo holds the BOUNDED
+    sample × TOP_K (q_id, nn_id) pairs — a model-sized collect."""
+    pairs = _sim_memo(
+        spark,
+        "bf_baseline",
+        sf_dir,
+        (),
+        lambda: [
             (r["q_id"], r["nn_id"])
             for r in brute_topk_kernel(spark, sf_dir, sample=True)
             .select("q_id", "nn_id")
             .collect()
-        ]
-    return spark.createDataFrame(
-        _BF_BASELINE[key], schema="q_id long, nn_id long"
+        ],
     )
+    return spark.createDataFrame(pairs, schema="q_id long, nn_id long")
 
 
 def _ann_census(
@@ -1143,23 +1102,35 @@ IVF_ASSIGN = 2  # redundant corpus assignment: each vector is indexed into
 IVF_TRAIN_ITERS = 3  # Lloyd rounds refining the seed centroids
 IVF_TRAIN_SAMPLE_MOD = 2  # train on the deterministic crc32 half-sample
 
-# Trained-centroid cache, one entry per (applicationId, embeddings
-# fingerprint): a production IVF builds its index ONCE and serves many
-# queries from it — retraining per query call would be the anti-pattern.
-# numpy arrays carry no Spark state, but the key still includes
-# applicationId so a process cycling SparkSessions can evict (clustering.py
-# precedent), and the staging fingerprint so an in-place fixture
-# regeneration cannot replay stale centroids.
-_IVF_CENTROIDS: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _ivf_cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    from transf_spark.sources.tables import staging_tag
-
-    app = spark.sparkContext.applicationId
-    for dead in [k for k in _IVF_CENTROIDS if k[0] != app]:
-        del _IVF_CENTROIDS[dead]
-    return (app, staging_tag(sf_dir, "embeddings"))
+def _ivf_train(e: DataFrame) -> tuple[np.ndarray, np.ndarray] | None:
+    """(ids, centroids) of the trained IVF coarse quantizer over the
+    uniform-dim corpus ``e``, or None for an empty corpus. Memoized by
+    ann_ivf_topk: a production IVF builds its index ONCE and serves many
+    queries from it."""
+    cent_rows = (
+        e.orderBy(F.md5(F.col("vec_id").cast("string")))
+        .limit(IVF_K)
+        .select("vec_id", "v")
+        .collect()
+    )
+    if not cent_rows:
+        return None
+    _, cent = _centroid_matrix(cent_rows, "vec_id", "v")
+    ids = np.arange(1, len(cent_rows) + 1, dtype=np.int64)
+    # Lloyd-train the coarse quantizer on a deterministic half-sample
+    # (crc32 split — the production pattern: train on a sample once,
+    # index the full corpus with the trained centroids). SPHERICAL
+    # rounds (cosine assignment), not L2: the index assigns and
+    # probes by cosine, so the trainer must optimize the same metric
+    # (an L2 trainer pulls centroids toward high-norm regions the
+    # cosine assignment never honors), and the cosine kernel's B×K
+    # matmul also stays memory-flat at K=32 where the L2 difference
+    # kernel's B×K×d intermediate would not (~40 MB/batch at K ≤ 8).
+    train = e.filter(
+        F.pmod(F.crc32(F.col("vec_id").cast("string")), F.lit(IVF_TRAIN_SAMPLE_MOD))
+        == 0
+    ).select("vec_id", "v")
+    return _lloyd_rounds(train, ids, cent, IVF_TRAIN_ITERS, metric="cosine")
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1194,40 +1165,14 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     entries. The only exchange in the whole plan is the final per-query
     top-k window on q_id (plan-gated) — high cardinality, even spread."""
     e = _emb_double(spark, sf_dir, uniform=True)
-    key = _ivf_cache_key(spark, sf_dir)
-    trained = _IVF_CENTROIDS.get(key)
-    if trained is None:
-        cent_rows = (
-            e.orderBy(F.md5(F.col("vec_id").cast("string")))
-            .limit(IVF_K)
-            .select("vec_id", "v")
-            .collect()
+    trained = _sim_memo(
+        spark, "ivf_centroids", sf_dir, (), lambda: _ivf_train(e)
+    )
+    if trained is None:  # zero valid embeddings — nothing to train/index
+        return spark.createDataFrame(
+            [], "q_id long, nn_id long, cosine double, rnk long"
         )
-        if not cent_rows:  # zero valid embeddings — nothing to train/index
-            return spark.createDataFrame(
-                [], "q_id long, nn_id long, cosine double, rnk long"
-            )
-        _, cent = _centroid_matrix(cent_rows, "vec_id", "v")
-        ids = np.arange(1, len(cent_rows) + 1, dtype=np.int64)
-        # Lloyd-train the coarse quantizer on a deterministic half-sample
-        # (crc32 split — the production pattern: train on a sample once,
-        # index the full corpus with the trained centroids). SPHERICAL
-        # rounds (cosine assignment), not L2: the index assigns and
-        # probes by cosine, so the trainer must optimize the same metric
-        # (an L2 trainer pulls centroids toward high-norm regions the
-        # cosine assignment never honors), and the cosine kernel's B×K
-        # matmul also stays memory-flat at K=32 where the L2 difference
-        # kernel's B×K×d intermediate would not (~40 MB/batch at K ≤ 8).
-        train = e.filter(
-            F.pmod(
-                F.crc32(F.col("vec_id").cast("string")), F.lit(IVF_TRAIN_SAMPLE_MOD)
-            )
-            == 0
-        ).select("vec_id", "v")
-        ids, cent = _lloyd_rounds(train, ids, cent, IVF_TRAIN_ITERS, metric="cosine")
-        _IVF_CENTROIDS[key] = (ids, cent)
-    else:
-        ids, cent = trained
+    ids, cent = trained
     assign_lists = _probe_lists_udf(ids, cent, IVF_ASSIGN)
     probes = _probe_lists_udf(ids, cent, IVF_PROBES)
     cos_pairs = _cosine_pairs_udf()

@@ -213,13 +213,22 @@ def _language_id_profile_distributed(train: DataFrame, v: int) -> DataFrame:
     the observed counts, with the SAME Spark-side log/quantize expression
     (matched: log((n+1)/(total+V)); unmatched: the same expression with
     n = 0), so every logp_q long is bit-identical to the collected
-    branch's. ``train`` arrives lazily-checkpointed by the caller so the
+    branch's. The lang match is null-safe: the collected branch profiles
+    NULL-lang training docs as their own candidate, so this one must too.
+    ``train`` arrives lazily-checkpointed by the caller so the
     explode+aggregate runs once, not once per consumer."""
     totals = train.groupBy("lang").agg(F.sum("n").alias("total"))
     vocab = train.select("bg").distinct()
+    counts = train.select(
+        F.col("lang").alias("n_lang"), F.col("bg").alias("n_bg"), "n"
+    )
     return (
         totals.crossJoin(vocab)
-        .join(train, ["lang", "bg"], "left")
+        .join(
+            counts,
+            F.col("lang").eqNullSafe(F.col("n_lang")) & (F.col("bg") == F.col("n_bg")),
+            "left",
+        )
         .select(
             F.col("lang").alias("cand_lang"),
             "bg",

@@ -35,29 +35,13 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# Pre-staged queries awaiting a grading-window slot (SURVEY §7 M8): fully
-# built and parity-tested (tests/test_oracle_parity.py sweeps BOTH
-# registries), but NOT emitted by queries()/oracle_sql() — the driver's
-# 50-entry window grades stale greens one-for-one against new names, so a
-# round that already spent its new-registration budget stages the rest
-# here. Promotion = deleting `pending=True` on the register() call.
-PENDING_REGISTRY: dict[str, QuerySpec] = {}
-
-
-def register(name: str, *, oracle: str | None, category: str, origin: str,
-             pending: bool = False):
-    """Decorator: add a query builder to the registry.
-
-    ``pending=True`` stages the query in :data:`PENDING_REGISTRY` instead —
-    built, tested, and sweep-covered, but invisible to the driver until the
-    grading window has room (see the window-discipline note below).
-    """
+def register(name: str, *, oracle: str | None, category: str, origin: str):
+    """Decorator: add a declared query to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in REGISTRY or name in PENDING_REGISTRY:
+        if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        target = PENDING_REGISTRY if pending else REGISTRY
-        target[name] = QuerySpec(name, fn, oracle, category, origin)
+        REGISTRY[name] = QuerySpec(name, fn, oracle, category, origin)
         return fn
 
     return deco
@@ -285,12 +269,9 @@ def _ordered_specs() -> list[QuerySpec]:
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """Live + pending specs — the TEST discovery surface: parity sweeps
-    gate pending (M8) queries exactly like live ones, so promotion to the
-    driver registry is a one-word change. Driver-facing surfaces
-    (queries()/oracle_sql()/bench) read REGISTRY only."""
+    """Every declared spec, in registration order."""
     _load_all_modules()
-    return {**REGISTRY, **PENDING_REGISTRY}
+    return REGISTRY
 
 
 def queries() -> dict[str, QueryFn]:

@@ -8,21 +8,21 @@ columnar and pushed-down.
 
 Scale notes (100 TB): loaders never infer, and return plain scans so Catalyst
 can prune columns/partitions per query. Nothing here forces materialization.
-Loads are memoized per (session, file identity) as PLAN objects — the cache
-holds the lazy scan (file listing + footer schema resolution), never rows;
-every action still reads the parquet bytes. This is the same metadata reuse a
-catalog table provides (optimization guide §6: manifest metadata beats
-re-listing), keyed on (mtime_ns, size) so a regenerated fixture re-resolves.
+Loads are memoized per session as PLAN objects (``transf_spark.memo``) —
+the memo holds the lazy scan (file listing + footer schema resolution), never
+rows; every action still reads the parquet bytes. This is the same metadata
+reuse a catalog table provides, fingerprinted on (mtime_ns, size) so a
+regenerated fixture re-resolves.
 """
 
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from transf_spark import schemas
+from transf_spark.memo import memo
 from transf_spark.session import ensure_conf
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -113,33 +113,19 @@ def stage_once(prefix: str, tag: str, write_fn) -> str:
     return out
 
 
-# events.ts parquet time-unit per file path — the driver's generator has
-# shipped this column as both TIMESTAMP(NANOS) (rounds 1-2) and
-# TIMESTAMP(MICROS) (round 3); assuming one of them silently shifts every
-# timestamp by 1000× when the fixture changes, so the unit is detected from
-# the parquet footer (one cheap driver-side metadata read, cached by
-# (path, mtime) so a regenerated fixture re-detects).
-_TS_UNIT_CACHE: dict[tuple[str, int], str] = {}
-
-
 def events_ts_unit(sf_dir: str) -> str:
-    """'ns' or 'us' — the physical unit of events.ts in this fixture."""
-    path = table_path(sf_dir, "events")
-    key = (path, os.stat(path).st_mtime_ns)
-    if key not in _TS_UNIT_CACHE:
-        import pyarrow.parquet as pq
+    """'ns' or 'us' — the physical unit of events.ts in this fixture.
 
-        t = pq.read_schema(path).field("ts").type
-        unit = getattr(t, "unit", "ns")
-        if unit not in ("ns", "us"):
-            raise ValueError(f"unsupported events.ts unit {unit!r} in {path}")
-        # Stale mtimes for the same path are dead (fixture regenerated in
-        # place); dropping them keeps the dict bounded by live fixture count
-        # in a long-lived process (round-3 ADVICE).
-        for dead in [k for k in _TS_UNIT_CACHE if k[0] == path]:
-            del _TS_UNIT_CACHE[dead]
-        _TS_UNIT_CACHE[key] = unit
-    return _TS_UNIT_CACHE[key]
+    The fixture generator has shipped this column as both TIMESTAMP(NANOS)
+    and TIMESTAMP(MICROS); assuming one of them silently shifts every
+    timestamp by 1000x, so the unit is read from the parquet footer."""
+    import pyarrow.parquet as pq
+
+    path = table_path(sf_dir, "events")
+    unit = getattr(pq.read_schema(path).field("ts").type, "unit", "ns")
+    if unit not in ("ns", "us"):
+        raise ValueError(f"unsupported events.ts unit {unit!r} in {path}")
+    return unit
 
 
 def ts_micros_col(sf_dir: str, col: str = "ts") -> F.Column:
@@ -152,22 +138,6 @@ def ts_micros_col(sf_dir: str, col: str = "ts") -> F.Column:
     return F.timestamp_micros(raw)
 
 
-# session -> {(abspath, mtime_ns, size) -> DataFrame}. Weak-keyed so a
-# stopped session's plans are collectable. Round-15 measurement: one bench
-# build pass makes 331 load_table calls for 10 distinct tables, and each
-# cold call pays 15 ms (schema-pinned relation resolve + file listing) to
-# 86 ms (events: the normalization select re-analyzes eagerly) of pure
-# driver-side metadata work — 19.5 s of a 90 s pass recomputing identical
-# lazy plans. Caching the PLAN is not caching data or results: the
-# DataFrame holds file paths + schema; every action re-scans the parquet.
-# No builder loads the same table twice and bracket-joins the two loads
-# (checked round-15), so object identity cannot create an ambiguous
-# self-join that the two-reads form would have avoided.
-_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table with its pinned schema.
 
@@ -176,24 +146,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     LongType field likewise surfaces as the raw count) → microsecond
     TIMESTAMP_NTZ, bit-identical to DuckDB's read of the same file.  The
     nano-precision count is kept as ``ts_ns`` for ordering fidelity.
+
+    The lazy plan is memoized per session on the file's (mtime_ns, size):
+    a cold call costs 15 ms (schema-pinned resolve + file listing) to 86 ms
+    (events' normalization select), and one bench build pass makes 331
+    calls for 10 distinct tables. The memo holds the plan, never rows —
+    every action re-scans the parquet.
     """
     ensure_conf(spark)
     if name not in schemas.SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {schemas.TABLE_NAMES}")
     path = os.path.abspath(table_path(sf_dir, name))
     st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    per_session = _PLAN_CACHE.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.schema(schemas.SCHEMAS[name]).parquet(path)
-    if name == "events":
+
+    def build() -> DataFrame:
+        df = spark.read.schema(schemas.SCHEMAS[name]).parquet(path)
+        if name != "events":
+            return df
         ns = F.col("ts") if events_ts_unit(sf_dir) == "ns" else F.col("ts") * 1000
         # one select, not withColumn chains — each withColumn re-analyzes
         # the growing plan eagerly (measured 86 ms/call vs 15 for a plain
         # schema-pinned scan)
-        df = df.select(
+        return df.select(
             "event_id",
             ts_micros_col(sf_dir).cast("timestamp_ntz").alias("ts"),
             "user_id",
@@ -202,31 +176,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "props",
             ns.alias("ts_ns"),
         )
-    # a regenerated fixture (new mtime/size) must not strand the old plan
-    for stale in [k for k in per_session if k[0] == path and k != key]:
-        del per_session[stale]
-    per_session[key] = df
-    return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in schemas.TABLE_NAMES}
-
-
-# session -> the (name -> (path, mtime_ns, size) | None) snapshot its temp
-# views were last registered from. Weak-keyed like _PLAN_CACHE. Round-15
-# measurement: a warm register_views call costs ~58 ms of py4j
-# createOrReplaceTempView round trips, and 24 sql_* builders call it per
-# bench pass (~7 s per 5-pass session) while the registered state is
-# byte-identical between calls. The snapshot is re-stat'ed every call
-# (10 os.stat ≈ 0.1 ms), so a regenerated fixture, a different sf_dir, or
-# a table appearing/vanishing all change the snapshot and force a real
-# re-registration — only the true no-op case is skipped. Nothing else in
-# the repo creates or drops these temp views (checked round-15), so the
-# snapshot cannot go stale behind the cache's back.
-_VIEWS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+    return memo(spark, path, (st.st_mtime_ns, st.st_size), build)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -237,8 +188,12 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     ABSENT from ``sf_dir`` has its view DROPPED, never left behind: a
     shared session (pytest, REPL, bench) that previously registered a full
     fixture would otherwise silently serve the PREVIOUS fixture's data to
-    a query referencing the missing table (round-8 review finding) — the
-    drop makes such a query fail loudly at resolution instead."""
+    a query referencing the missing table — the drop makes such a query
+    fail loudly at resolution instead.
+
+    Memoized per session on the present/absent snapshot: re-registering
+    costs ~58 ms of py4j round trips, and 24 sql_* queries call this per
+    bench pass with the snapshot unchanged."""
     snapshot: dict[str, tuple | None] = {}
     for name in schemas.TABLE_NAMES:
         p = table_path(sf_dir, name)
@@ -247,23 +202,22 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
             snapshot[name] = (os.path.abspath(p), st.st_mtime_ns, st.st_size)
         except OSError:
             snapshot[name] = None
-    if _VIEWS_CACHE.get(spark) == snapshot:
-        # Hardening (round-15 ADVICE): the snapshot can't see an external
-        # DROP VIEW / createOrReplaceTempView on this session (e.g. user
-        # code on the SQL-facing API), so verify the registered names
-        # still resolve before taking the skip path. tableExists is a
-        # catalog lookup (~0.5 ms each, ≤10 names) — an order cheaper
-        # than the ~58 ms re-registration the memo exists to skip.
-        if all(
-            spark.catalog.tableExists(name)
-            for name, key in snapshot.items()
-            if key is not None
-        ):
-            return
-        del _VIEWS_CACHE[spark]
-    for name, key in snapshot.items():
-        if key is not None:
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-        else:
-            spark.catalog.dropTempView(name)
-    _VIEWS_CACHE[spark] = snapshot
+
+    def register() -> dict:
+        for name, key in snapshot.items():
+            if key is not None:
+                load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+            else:
+                spark.catalog.dropTempView(name)
+        return snapshot
+
+    if memo(spark, ("views",), snapshot, register) is not snapshot and not all(
+        spark.catalog.tableExists(name)
+        for name, key in snapshot.items()
+        if key is not None
+    ):
+        # A hit whose views were DROPPED on this session behind the memo's
+        # back (user code on the SQL-facing API): re-register. tableExists
+        # is ~0.5 ms a name. A view REPLACED under the same name still
+        # resolves, so a replacement is not healed.
+        register()
