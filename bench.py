@@ -11,6 +11,13 @@ then each query timed as plan-build + execution to a count-style sink
 full materialization via ``df.toLocalIterator`` drain? No — ``count()`` can
 prune columns. We force full-row materialization with a cheap global hash so
 measured time covers the real operator work, not result transfer).
+
+Scan protocol: Spark reads a staged re-layout of any fixture table larger
+than the session's ``spark.sql.files.openCostInBytes`` that has fewer than
+K = 2 x cores row groups (``transf_spark/sources/tables.py``); at sf0.1 that
+is ``lineitem`` alone. Its first load stages the copy (0.3-0.4 s) inside
+the first timed rep, which min-of-N drops. The DuckDB oracle and the
+calibration scan below still read the original files.
 """
 
 from __future__ import annotations
@@ -295,8 +302,8 @@ def main() -> None:
     for name in names:
         try:
             materialize(registry[name](spark, warm_sf))
-        except Exception:
-            pass
+        except Exception as e:
+            print(f"warm-up {name} failed: {type(e).__name__}", file=sys.stderr)
 
     prefault(sf_dir)
     cal_start = _calibrate(spark, sf_dir)

@@ -69,8 +69,8 @@ def main() -> None:
     for n in args.names:
         try:
             materialize(registry[n](spark, "/root/testdata/sf0.001"))
-        except Exception:
-            pass
+        except Exception as e:
+            print(f"warm-up {n} failed: {type(e).__name__}", file=sys.stderr)
 
     cal_start = calibrate(spark)
     t: dict[str, float] = {}

@@ -74,8 +74,8 @@ def main() -> None:
     for name in names:
         try:
             materialize(registry[name](spark, "/root/testdata/sf0.001"))
-        except Exception:
-            pass
+        except Exception as e:
+            print(f"warm-up {name} failed: {type(e).__name__}", file=sys.stderr)
     prefault(sf_dir)
 
     rows = []

@@ -1391,7 +1391,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     full per-flag sort of the corpus in 3 tasks, a real 100 TB ceiling.
     Bucketed two-stage exact-median instead:
 
-    1. bucket prices by a MONOTONE integer key (cents // bucket width —
+    1. bucket prices by a MONOTONE integer key (cents div bucket width —
        exact decimal→long arithmetic, no float) and aggregate per-bucket
        weight in ONE map-side-combinable pass — the only corpus-wide
        exchange carries ≤ |flags|·|buckets| rows;
@@ -1429,14 +1429,12 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         dec("l_extendedprice").alias("price"),
         F.col("l_quantity").cast("long").alias("wt"),
     )
-    # cents = price·100 is exact DECIMAL(12,2)→long; floor-div keeps the
-    # key monotone in price (cents ≥ 0 for money; pmod would not be
-    # monotone and floor-div of negatives still is)
+    # cents = price·100 is exact DECIMAL(12,2)→long, and integer `div`
+    # keeps the key exact and monotone in price (no double division; cents
+    # ≥ 0 for money, and div's truncation of negatives is still monotone,
+    # which pmod would not be)
     wc = w.withColumn(
-        "bkt",
-        F.floor((F.col("price") * 100).cast("long") / F.lit(bucket_cents)).cast(
-            "long"
-        ),
+        "bkt", F.expr(f"CAST(price * 100 AS BIGINT) div {bucket_cents}")
     )
     bsum = wc.groupBy("l_returnflag", "bkt").agg(F.sum("wt").alias("bw"))
     wb = W.partitionBy("l_returnflag").orderBy("bkt")
