@@ -5,8 +5,9 @@ min-of-N-across-passes discipline as bench.py).
 Times a set of REGISTERED queries (plus the serving surfaces) interleaved —
 one full pass over the set per rep, each query's reported number is its MIN
 across passes — so a host contention burst must span the entire session to
-contaminate a minimum. Includes bench.py's pinned pure-CPU calibration probe
-at both ends so the artifact carries host context.
+contaminate a minimum. Runs bench.py's calibration probes (pure-CPU range
+hash and sf lineitem scan, ``bench._calibrate``) at both ends so the artifact
+carries host context.
 
 Usage:
     python tools/ab_compare.py [--reps 7] [--sf /root/testdata/sf0.1]
@@ -28,26 +29,16 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from pyspark.sql import functions as F
-
 from bench import (
     CAL_RANGE_ANCHOR_SEC,
-    CAL_RANGE_ROWS,
+    CAL_SCAN_ANCHOR_SEC,
+    _calibrate,
     _serving_surfaces,
     materialize,
     prefault,
 )
 from transf_spark import queries as q
 from transf_spark.session import get_spark
-
-
-def calibrate(spark, reps: int = 3) -> float:
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        spark.range(CAL_RANGE_ROWS).select(F.sum(F.xxhash64("id")).alias("h")).collect()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
 
 
 def main() -> None:
@@ -72,7 +63,7 @@ def main() -> None:
         except Exception as e:
             print(f"warm-up {n} failed: {type(e).__name__}", file=sys.stderr)
 
-    cal_start = calibrate(spark)
+    cal_start = _calibrate(spark, args.sf)
     t: dict[str, float] = {}
     pass_totals: list[float] = []
     for _ in range(args.reps):
@@ -84,15 +75,18 @@ def main() -> None:
             if dt < t.get(n, float("inf")):
                 t[n] = dt
         pass_totals.append(round(time.perf_counter() - p0, 3))
-    cal_end = calibrate(spark)
+    cal_end = _calibrate(spark, args.sf)
 
     out = {
         "queries": {n: round(v, 4) for n, v in t.items()},
         "pass_totals": pass_totals,
         "calibration": {
-            "range_start_sec": cal_start,
-            "range_end_sec": cal_end,
+            "range_start_sec": cal_start["range_sec"],
+            "range_end_sec": cal_end["range_sec"],
             "range_anchor_sec": CAL_RANGE_ANCHOR_SEC,
+            "scan_start_sec": cal_start["scan_sec"],
+            "scan_end_sec": cal_end["scan_sec"],
+            "scan_anchor_sec": CAL_SCAN_ANCHOR_SEC,
         },
         "reps": args.reps,
         "agg": "min",

@@ -24,11 +24,10 @@ Usage::
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 import time
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from transf_spark.sources.tables import DEFAULT_SF_DIR
 
 
 def _spark(cpus: int | None = None):

@@ -16,8 +16,6 @@ Scale design notes (100 TB north star):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from transf_spark.functions.exprs import (
@@ -1350,6 +1348,12 @@ def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# agg_weighted_median's bucket width: $512, about 200 buckets over the TPC-H
+# price domain. Buckets far outnumber cores, so the fine window sees a
+# sliver of the corpus while the per-bucket control plane stays small.
+MEDIAN_BUCKET_CENTS = 51200
+
+
 @register(
     "agg_weighted_median",
     oracle="""
@@ -1415,12 +1419,8 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     column's domain (quantities); a negative weight would break cum
     monotonicity in EITHER form identically.
 
-    Bucket width is scale-parameterised (SPARK_GRAFT_MEDIAN_BUCKET_CENTS,
-    default $512 → ~200 buckets over the TPC-H price domain): production
-    sizing targets buckets ≫ cores so the fine window is a sliver of the
-    corpus while the control plane stays driver-trivial. NULL price/
-    weight exclusion unchanged (round-14 degenerate-TPCH probe)."""
-    bucket_cents = int(os.environ.get("SPARK_GRAFT_MEDIAN_BUCKET_CENTS", 51200))
+    Bucket width is ``MEDIAN_BUCKET_CENTS``. NULL price/weight exclusion
+    unchanged (round-14 degenerate-TPCH probe)."""
     li = load_table(spark, sf_dir, "lineitem")
     w = li.filter(
         F.col("l_extendedprice").isNotNull() & F.col("l_quantity").isNotNull()
@@ -1434,7 +1434,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≥ 0 for money, and div's truncation of negatives is still monotone,
     # which pmod would not be)
     wc = w.withColumn(
-        "bkt", F.expr(f"CAST(price * 100 AS BIGINT) div {bucket_cents}")
+        "bkt", F.expr(f"CAST(price * 100 AS BIGINT) div {MEDIAN_BUCKET_CENTS}")
     )
     bsum = wc.groupBy("l_returnflag", "bkt").agg(F.sum("wt").alias("bw"))
     wb = W.partitionBy("l_returnflag").orderBy("bkt")

@@ -282,14 +282,9 @@ def oracle_sql() -> dict[str, str]:
     return {spec.name: spec.oracle for spec in _ordered_specs() if spec.oracle is not None}
 
 
-_LOADED = False
-
-
 def _load_all_modules() -> None:
-    """Import every operator module (each registers its queries on import)."""
-    global _LOADED
-    if _LOADED:
-        return
+    """Import every operator module (each registers its queries on import;
+    ``sys.modules`` makes repeat calls free)."""
     # Imports deferred to avoid circulars (operator modules import `register`).
     from transf_spark.operators import (  # noqa: F401
         relational,
@@ -307,5 +302,3 @@ def _load_all_modules() -> None:
     )
     from transf_spark.sources import formats  # noqa: F401
     from transf_spark.streaming import stateful, windows  # noqa: F401
-
-    _LOADED = True

@@ -20,9 +20,10 @@ Conf rationale (100 TB north star, SURVEY.md §4.2):
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import SparkSession
+
+from transf_spark.memo import memo
 
 # Runtime-settable confs that correctness depends on.  Applied both in our own
 # builder and defensively onto a driver-provided session.
@@ -39,12 +40,6 @@ RUNTIME_CONFS: dict[str, str] = {
     # ANSI off: mirror permissive reference semantics (clamps, not errors).
     "spark.sql.ansi.enabled": "false",
 }
-
-
-# Marker a drain_session sets so ensure_conf never clobbers its explicit
-# shuffle-partition pin (a builder calling load_table on the drain session
-# would otherwise silently reset the state-store sizing — round-5 review).
-_SHUFFLE_PIN_MARKER = "spark.transf_spark.shufflePinned"
 
 
 def default_parallelism() -> int:
@@ -114,74 +109,59 @@ def _quiet_window_exec(spark: SparkSession) -> None:
         pass
 
 
-# Sessions already pinned by ensure_conf this process. ensure_conf is called
-# from EVERY load_table (331 times per bench build pass) and each call costs
-# ~9 ms of py4j conf round trips (round-15 measurement: 8.15 s of a 90 s
-# bench pass) while being a no-op after the first call on a session — the
-# confs are runtime-settable but nothing in this process unsets them, and the
-# one deliberate re-pin site (drain_session's shuffle pin) sets its conf
-# AFTER its ensure_conf call. Weak set: a stopped session's entry must not
-# keep the Python wrapper alive, and a NEW wrapper object (driver-provided,
-# newSession) is pinned on first sight.
-_PINNED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-
 def ensure_conf(spark: SparkSession) -> SparkSession:
-    """Pin runtime-settable confs on an externally-provided session.
+    """Pin the runtime-settable confs correctness depends on, once per
+    session: ``RUNTIME_CONFS`` plus ``spark.sql.shuffle.partitions`` at the
+    session's own core count (``sc.defaultParallelism``, floor 8), on our
+    sessions and on a driver-provided one alike.
 
-    ``spark.sql.shuffle.partitions`` is pinned to the SESSION'S OWN core
-    count even on a driver-provided session: batch plans are insensitive
-    (AQE re-coalesces at runtime), but STREAMING stateful operators are
-    not — the state store inherits the shuffle partition count and AQE
-    never applies, so a bare session's default 200 turns every
-    micro-batch of a stream-stream join into 200 tiny state tasks
-    (measured 27s vs ~4s for the ack-verify join at sf0.01). Derived from
-    ``sc.defaultParallelism`` — the session's real core count — not the
-    host's: a get_spark(cpus=8) session on a 64-core box must shuffle at
-    8, not 64 (round-5 review). A drain_session's explicit pin (marker
-    conf) is never clobbered. On a real cluster this would be
-    executor-cores×2-3.
+    The shuffle pin matters for streams, not batch plans: AQE re-coalesces
+    batch shuffles at runtime, but a stateful operator's state store takes
+    the shuffle partition count at ``start()`` and AQE never applies, so a
+    bare session's default 200 turns every micro-batch of a stream-stream
+    join into 200 tiny state tasks (27 s vs ~4 s for the ack-verify join
+    at sf0.01). It follows the session's cores, not the host's: a
+    ``get_spark(cpus=8)`` session on a 64-core host shuffles at 8.
 
-    Memoized per session object (see ``_PINNED_SESSIONS``): the first call
-    pins, later calls return immediately — idempotence made cheap instead
-    of merely promised.
+    The pin is a ``memo`` slot on the session, so only the first call sets
+    confs. Every ``load_table`` calls this (331 calls per bench build pass),
+    and a pin costs ~9 ms of py4j conf round trips (8.15 s of a 90 s bench
+    pass when it ran on every call). A later ``conf.set`` on the session,
+    such as ``drain_session``'s shuffle count, therefore stands.
     """
-    if spark in _PINNED_SESSIONS:
-        return spark
-    confs = dict(RUNTIME_CONFS)
-    if spark.conf.get(_SHUFFLE_PIN_MARKER, None) is None:
-        confs["spark.sql.shuffle.partitions"] = str(
-            max(spark.sparkContext.defaultParallelism, 8)
-        )
-    for k, v in confs.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Non-settable in this deployment — proceed; readers that depend
-            # on it will raise a clear error of their own.
-            pass
-    _quiet_window_exec(spark)
-    _PINNED_SESSIONS.add(spark)
+
+    def pin() -> None:
+        confs = {
+            **RUNTIME_CONFS,
+            "spark.sql.shuffle.partitions": str(
+                max(spark.sparkContext.defaultParallelism, 8)
+            ),
+        }
+        for k, v in confs.items():
+            try:
+                spark.conf.set(k, v)
+            except Exception:
+                # Non-settable in this deployment — proceed; readers that
+                # depend on it will raise a clear error of their own.
+                pass
+        _quiet_window_exec(spark)
+
+    memo(spark, ("conf",), None, pin)
     return spark
 
 
 def drain_session(spark: SparkSession, shuffle_partitions: int) -> SparkSession:
-    """Private session (shared SparkContext, separate SQLConf + temp views)
-    for bounded stream drains that need a non-default shuffle-partition
-    count.
+    """Private session (shared SparkContext, separate SQLConf and temp
+    views) pinned at ``shuffle_partitions``, for bounded stream drains.
 
-    A stateful stream locks its state-store partition count from the
-    session conf at ``start()``; the pre-round-5 code temporarily mutated
-    the SHARED session's ``spark.sql.shuffle.partitions`` around the start,
-    which races any query started concurrently on the same session
-    (round-4 ADVICE). ``newSession()`` isolates the conf instead — the
-    stream (reader, plan AND memory sink) must be built on the returned
-    session for the pinned count to take effect. Runtime confs are
-    re-pinned because a new session starts from the context defaults, not
-    the caller's session conf."""
+    A stateful stream takes its state-store partition count from the
+    session conf at ``start()``. Setting it on the caller's session would
+    race any query started concurrently there, so the count goes on a
+    ``newSession()``, and the stream (reader, plan and memory sink) must
+    be built on the returned session. ``ensure_conf`` pins the new
+    session first, since it starts from the context defaults; the count is
+    set after that pin, so the later ``ensure_conf`` and ``load_table``
+    calls of a stream builder on this session leave it in place."""
     s = ensure_conf(spark.newSession())
     s.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    # any later ensure_conf on this session (e.g. a load_table inside the
-    # stream builder) must not reset the state-store sizing
-    s.conf.set(_SHUFFLE_PIN_MARKER, "true")
     return s

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from transf_spark import schemas
 from transf_spark.functions.exprs import disc_price
+from transf_spark.memo import memo
 from transf_spark.queries import register
 from transf_spark.sources import tables
 from transf_spark.sources.tables import load_table
@@ -53,35 +54,18 @@ XML_INVALID_CHARS_RE2 = (
 )
 
 
-def _sources_code_tag() -> str:
-    """Hash of this module + the Avro codec source, computed at import:
-    the DataSource register-once markers key on it, so a long-lived
-    interactive session that reloads edited reader code re-registers the
-    new pickled class instead of serving the stale one (round-10 advice),
-    while bench/test sessions still pay register() exactly once."""
-    import hashlib
-
-    h = hashlib.md5()
-    for mod in (__file__, os.path.join(os.path.dirname(__file__), "avro_ocf.py")):
-        try:
-            with open(mod, "rb") as f:
-                h.update(f.read())
-        except OSError:
-            h.update(mod.encode())  # frozen/zipped install: path as tag
-    return h.hexdigest()[:12]
-
-
-_SOURCES_CODE_TAG = _sources_code_tag()
-
-
-def _register_datasource_once(spark: SparkSession, marker: str, source_cls) -> None:
-    """Register a Python DataSource once per (session, code version): each
-    register() re-ships the pickled class to the JVM and logs a
-    DataSourceManager 'replaced' WARN per call — churn a bench pass pays
-    5x and a shared production session pays per query."""
-    if spark.conf.get(marker, None) != _SOURCES_CODE_TAG:
-        spark.dataSource.register(source_cls)
-        spark.conf.set(marker, _SOURCES_CODE_TAG)
+def _register_datasource(spark: SparkSession, source_cls) -> None:
+    """Register a Python DataSource once per session, as a ``memo`` slot
+    keyed on its name. Registrations are per session, like memo slots.
+    Each ``register()`` re-ships the pickled class to the JVM and logs a
+    DataSourceManager 'replaced' WARN, which a bench pass would pay 5x and
+    a shared session once per query."""
+    memo(
+        spark,
+        ("datasource", source_cls.name()),
+        None,
+        lambda: spark.dataSource.register(source_cls),
+    )
 
 
 def _staged_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:
@@ -213,23 +197,24 @@ def _bucketed_table(
     columns: list[str],
     n_buckets: int = 8,
 ):
-    """Stage a fixture table as a bucketed+sorted external parquet table
-    (files written once per fixture fingerprint; catalog metadata recreated
-    per session with a metadata-only DDL over the existing files)."""
+    """Stage a fixture table as a bucketed+sorted external parquet table.
+
+    ``stage_once`` writes the files once per fixture fingerprint, in
+    whichever process takes its lock first; that write also registers the
+    table in the writer's catalog. Any session whose catalog lacks the
+    table (another session, or a process that found the stage done)
+    recreates it with a metadata-only DDL over the existing files."""
     from transf_spark.sources.sinks import write_bucketed
 
     tag = tables.staging_tag(sf_dir, name, extra=f"bucket{n_buckets}:{key}")
     tbl = f"{name}_b_{tag}"
-    out = f"/tmp/transf_spark_bucket_{name}_{tag}"
-    if not os.path.exists(os.path.join(out, "_READY")):
 
-        def write(out_dir: str) -> None:
-            df = load_table(spark, sf_dir, name).select(*columns)
-            write_bucketed(df, tbl, key, n_buckets, sort_col=key, path=out_dir)
+    def write(out_dir: str) -> None:
+        df = load_table(spark, sf_dir, name).select(*columns)
+        write_bucketed(df, tbl, key, n_buckets, sort_col=key, path=out_dir)
 
-        tables.stage_once(f"/tmp/transf_spark_bucket_{name}_", tag, write)
-    elif not spark.catalog.tableExists(tbl):
-        # files persist across sessions; only the catalog entry is per-session
+    out = tables.stage_once(f"/tmp/transf_spark_bucket_{name}_", tag, write)
+    if not spark.catalog.tableExists(tbl):
         schema = load_table(spark, sf_dir, name).select(*columns).schema
         ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
         spark.sql(
@@ -804,7 +789,7 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     the public extension point for sources Spark has no built-in for:
     internal APIs, bespoke wire formats, the reference's own custom file
     protocol R1 restated as a pluggable source). A DataSource subclass
-    registers per session; its reader declares ``PYSRC_PARTS`` input
+    registers once per session (``_register_datasource``); its reader declares ``PYSRC_PARTS`` input
     partitions that generate rows INDEPENDENTLY (partition p emits ids
     ≡ p mod P), so generation parallelizes exactly like a file scan
     splits.
@@ -839,9 +824,7 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         def reader(self, schema):
             return _Reader(self.options)
 
-    _register_datasource_once(
-        spark, "spark.transf_spark.synthDocsRegistered", SynthDocsSource
-    )
+    _register_datasource(spark, SynthDocsSource)
     df = (
         spark.read.format("transf_synth_docs")
         .option("n", PYSRC_N)
@@ -1123,9 +1106,7 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         def reader(self, schema):
             return _Reader(self.options)
 
-    _register_datasource_once(
-        spark, "spark.transf_spark.avroDocsRegistered", AvroDocsSource
-    )
+    _register_datasource(spark, AvroDocsSource)
     df = spark.read.format("transf_avro_docs").option("path", src).load()
     return _roundtrip_agg(df)
 
@@ -1272,9 +1253,7 @@ def scan_avro_logical_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         def reader(self, schema):
             return _Reader(self.options)
 
-    _register_datasource_once(
-        spark, "spark.transf_spark.avroTypedRegistered", AvroTypedSource
-    )
+    _register_datasource(spark, AvroTypedSource)
     df = spark.read.format("transf_avro_typed").option("path", src).load()
     return (
         df.groupBy("lang")

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -62,8 +63,6 @@ STATE_SCHEMA = T.StructType(
 )
 
 SESSION_TIMEOUT_MS = 20_000  # == default t_send + t_recv (BASELINE.md)
-
-_QUERY_SEQ = 0  # unique memory-sink names across repeated invocations
 
 
 def _bad_filename(fn: str) -> bool:
@@ -313,13 +312,7 @@ def run_stateful_reassembly(
     # `transf_server.cpp:78-131`), stop the query.
     import time as _time
 
-    global _QUERY_SEQ
-    _QUERY_SEQ += 1
-    # distinct "_pt_" prefix: the NoTimeout branch names its sink
-    # stateful_reassembly_{n} via windows.drain_to_memory's independent
-    # counter — a shared prefix could collide in one process and silently
-    # replace the memory temp view behind a previously returned DataFrame
-    qname = f"stateful_reassembly_pt_{_QUERY_SEQ}"
+    qname = f"stateful_reassembly_pt_{uuid.uuid4().hex}"
     writer = out.writeStream.format("memory").queryName(qname).outputMode("append")
     query = writer.trigger(processingTime="2 seconds").start()
     deadline = _time.time() + SESSION_TIMEOUT_MS / 1000 + 240

@@ -9,6 +9,8 @@ the literal ``readStream`` twin of the same plan and asserts result equality
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from transf_spark.functions.exprs import (
@@ -163,23 +165,20 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ACK_BASE_MS = 1_700_000_000_000
-_DRAIN_SEQ = 0  # unique memory-sink names across repeated invocations
 
 
 def drain_to_memory(stream_df, name: str, reader) -> "DataFrame":
-    """AvailableNow drain into a uniquely-named memory sink, FAIL-LOUD.
+    """AvailableNow drain into a memory sink named ``{name}_{uuid4 hex}``,
+    FAIL-LOUD.
 
-    The sequence counter, sink naming, and the fail-loud contract (a False
-    awaitTermination means a partially-populated sink that would silently
-    corrupt the oracle check — round-2 ADVICE) live in ONE place: this
-    sequence was previously copy-pasted at four sites, and stateful.py's
-    copy had already drifted into a silent partial return — the
-    characteristic failure of that duplication (round-5 review).
-    ``reader`` is the session whose ``.table()`` reads the sink back (the
-    dedicated drain session where one is used)."""
-    global _DRAIN_SEQ
-    _DRAIN_SEQ += 1
-    qname = f"{name}_{_DRAIN_SEQ}"
+    A unique name keeps a later drain from replacing the memory temp view
+    behind a DataFrame an earlier drain returned. Fail-loud: a False
+    ``awaitTermination`` means a partially-populated sink, which would
+    silently corrupt the oracle check, so it raises instead. Every drain
+    site goes through this one helper. ``reader`` is the session whose
+    ``.table()`` reads the sink back (the dedicated drain session where
+    one is used)."""
+    qname = f"{name}_{uuid.uuid4().hex}"
     q = (
         stream_df.writeStream.format("memory")
         .queryName(qname)
