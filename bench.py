@@ -1,29 +1,52 @@
 #!/usr/bin/env python
-"""Benchmark harness — runs the headline declared queries at
+"""Benchmark harness: times the headline declared queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "headline_queries_total_time", "value": N, "unit": "sec",
+     "queries": {...}, "sf": ..., "reps": 5, "agg": "min", "calibration": {...},
+     "cpus": C, "master": "local[C]", "like_for_like": {...}}
 
-Timing protocol: one untimed warmup of a trivial action (JVM+codegen spin-up),
-then each query timed as plan-build + execution to a count-style sink
-(df.write noop would add IO; the driver's own check collects, so we time a
-full materialization via ``df.toLocalIterator`` drain? No — ``count()`` can
-prune columns. We force full-row materialization with a cheap global hash so
-measured time covers the real operator work, not result transfer).
+Protocol:
 
-Scan protocol: Spark reads a staged re-layout of any fixture table larger
-than the session's ``spark.sql.files.openCostInBytes`` that has fewer than
-K = 2 x cores row groups (``transf_spark/sources/tables.py``); at sf0.1 that
-is ``lineitem`` alone. Its first load stages the copy (0.3-0.4 s) inside
-the first timed rep, which min-of-N drops. The DuckDB oracle and the
-calibration scan below still read the original files.
+1. Warm-up: one trivial action, then every named query once at sf0.001, so
+   JVM start-up and first-time code generation stay out of the timed reps.
+2. Prefault: the fixture's parquet files are read once into the page cache.
+3. Calibration: two fixed probes (``_calibrate``) run before and after the
+   timed reps and give the host's speed.
+4. Timed reps: five passes over the whole named set; a query's number is its
+   minimum across passes. One rep is the query's build (its Python function,
+   with every py4j round trip and any eager action it runs) followed by
+   ``materialize``, which hashes every output row and column on the
+   executors: no result crosses to the driver and no column is pruned.
+
+``BENCH_DETAIL.json`` beside this script receives each query's total
+minimum, its build minimum and its execute minimum (each phase's own minimum
+across passes, so build + execute <= total), the per-pass wall totals and
+both calibration probe points.
+
+Subset mode (``SPARK_GRAFT_HEADLINE=a,b,...``, ``serving:*`` names too)
+times only the named queries under the same protocol. It is the A/B tool:
+run it on both checkouts, alternating which goes first, and compare the
+detail files. A name that is not registered exits non-zero before Spark
+starts.
+
+Scan: Spark reads a staged re-layout of any fixture table larger than the
+session's ``spark.sql.files.openCostInBytes`` that has fewer than K = 2 x
+cores row groups (``transf_spark/sources/tables.py``); at sf0.1 that is
+``lineitem`` alone. Its first load stages the copy (0.3-0.4 s) inside the
+first timed rep, which min-of-N drops. The DuckDB oracle and the calibration
+scan still read the original files.
+
+Plan text for one query: ``python -m transf_spark explain <query>``; plan
+feature counts: ``transf_spark.plans.inspect.plan_stats``.
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import sys
 import time
@@ -37,10 +60,10 @@ from pyspark.sql import functions as F
 from transf_spark import queries as q
 from transf_spark.session import get_spark
 
-# Headline set: scan-heavy agg, star join, window top-k, as-of join, dedup,
-# similarity — the operators whose plans matter at 100 TB. Round 2 widened
-# coverage to the remaining LLM-pipeline ops (ngram-jaccard, simhash, ANN,
-# session windows) so regressions there are visible round-over-round.
+# Headline set: the declared queries whose plans matter at scale (scan-heavy
+# aggregates, star and range joins, window top-k, as-of joins, the dedup and
+# similarity families, the text and LLM-pipeline operators, the streams) and
+# the four serving surfaces. New entries go at the END (see LIKE_FOR_LIKE).
 HEADLINE = [
     "agg_hash_groupby",
     "join_multiway_star",
@@ -73,16 +96,13 @@ HEADLINE = [
     "stream_session_window",
     "reassembly_ordered_concat",
     "completion_manifest",
-    # round-3 additions
     "scalar_bitwise_suite",
     "window_value_suite",
     "agg_stats_suite",
     "dedup_cluster_cc",
-    # round-4 additions
     "text_tfidf_topk",
     "embedding_quantize_int8",
     "events_sessionize",
-    # round-5 additions
     "events_funnel_steps",
     "agg_retention_cohort",
     "text_unigram_lm_score",
@@ -108,7 +128,6 @@ HEADLINE = [
     "events_topk_paths",
     "stream_window_distinct_users",
     "stream_checkpoint_incremental",
-    # round-5 second batch
     "events_attribution_touch",
     "events_gapfill_ffill",
     "agg_linreg_daily_trend",
@@ -116,13 +135,11 @@ HEADLINE = [
     "dedup_levenshtein_blocked",
     "sql_recursive_hierarchy",
     "scan_dynamic_partition_pruning",
-    # round-6 additions
     "sql_promo_revenue",
     "sql_parts_supplier_notin",
     "sql_top_supplier",
     "docs_train_val_split",
     "docs_shard_assign",
-    # round-6 second batch
     "sql_customer_distribution",
     "sql_volume_shipping",
     "sql_avg_yearly",
@@ -135,7 +152,6 @@ HEADLINE = [
     "docs_quality_gate_report",
     "embedding_label_centroid_cosine",
     "scan_text_lines_roundtrip",
-    # round-8 additions
     "sql_market_share",
     "sql_large_orders",
     "sql_discount_brackets",
@@ -145,21 +161,17 @@ HEADLINE = [
     "agg_bitmap_distinct_segments",
     "scan_jsonl_corrupt_tolerant",
     "multimodal_frame_sample",
-    # round-9 additions
     "sql_product_profit",
     "sql_returned_customers",
     "sql_important_stock",
     "sql_priority_shipping",
     "stream_topk_sketch",
     "sql_forecast_revenue",
-    # round-9 serving surfaces (see SERVING below — timed so a serving
-    # regression can't hide behind the promoted censuses' audit cost)
+    # per-row serving surfaces (see _serving_surfaces)
     "serving:ann_ivf_topk",
     "serving:kmeans_cluster_profile",
     "serving:pca_projection_rows",
     "serving:frame_sample_rows",
-    # round-10 promotions (pre-staged in round 9, live since the round-10
-    # pending=True deletion)
     "sql_min_cost_supplier",
     "sql_promotable_parts",
     "agg_theta_sketch_setops",
@@ -169,9 +181,7 @@ HEADLINE = [
     "scan_xml_roundtrip",
     "scalar_variant_shred",
     "scan_python_datasource",
-    # round-10 addition (Avro via the pure-Python OCF DataSource)
     "scan_avro_roundtrip",
-    # round-13 addition (logical types on the typed Spark surface)
     "scan_avro_logical_typed",
 ]
 
@@ -200,13 +210,11 @@ assert (
 
 
 def _serving_surfaces() -> dict:
-    """The per-row surfaces of the four promoted censuses. Their DECLARED
-    queries time the index-build AUDIT (the census contract — run once per
-    build); these time what a user pays PER QUERY/ROW after the build, the
-    number the round-8 census promotions made invisible in BENCH (round-8
-    verdict item 1). The IVF centroid cache is warm from the census run in
-    the same session — exactly the build-once/serve-many split being
-    measured."""
+    """The per-row surfaces of the four census queries. The declared
+    queries time the index-build audit (run once per build); these time what
+    a user pays per query or row after the build. The IVF centroid cache is
+    warm from the census run in the same session: the build-once,
+    serve-many split being measured."""
     from transf_spark.operators.multimodal import frame_sample_rows
     from transf_spark.operators.similarity import (
         ann_ivf_topk,
@@ -241,26 +249,22 @@ def prefault(d: str) -> None:
                 pass
 
 
-# Fixed calibration probes (round-15 verdict item 2): the same-code bench
-# total swings with HOST speed (r14 measured 67.6-78.1 s across three
-# identical runs; the r13->r14 artifact moved 1.17x on untouched queries),
-# so every bench session measures two pinned workloads whose cost cannot
-# change with repo code — a pure-CPU codegen burn (spark.range + xxhash64
-# fold, zero IO) and a pinned full-column parquet scan of the fixture's
-# lineitem (page-cache read + decode; constant unless the driver
-# regenerates fixtures). Each runs min-of-CAL_REPS at session START and
-# END; the artifact carries both, plus host_factor = geomean of
-# min(start, end) / anchor. ANCHORS are pinned from the round-15
-# measurement session (min over several full sessions on a quiet host),
-# so host_factor ~ 1.0 means "r15-anchor-speed host"; a round whose
-# like_for_like moved 1.2x with host_factor 1.2 is flat code.
-# NOTE: the r10 like_for_like anchor (70.674 s) PREDATES calibration —
-# cross-round normalization is meaningful from r15 forward.
-CAL_RANGE_ROWS = 5_000_000_000  # ~0.77 s on the r15 anchor host — long
-# enough that per-task scheduling noise (~10 ms) is invisible, short
-# enough that 2×5 reps cost ~11 s per bench session
+# Calibration probes: the same code's bench total swings with the host's
+# speed (three identical runs have measured 67.6-78.1 s), so every session
+# times two workloads whose cost no repo change can move: a pure-CPU codegen
+# burn (spark.range + xxhash64 fold, no IO) and a full-column hash scan of
+# the fixture's lineitem (page-cache read + decode). Each runs min-of-
+# CAL_REPS before and after the timed reps; the artifact carries both points
+# and host_factor = geomean over the two probes of min(start, end) / anchor.
+# The anchors come from a quiet local[32] host, so host_factor ~ 1.0 means an
+# anchor-speed host, and a like_for_like total that moved 1.2x with
+# host_factor 1.2 is flat code. The like_for_like anchor predates the
+# probes, so calibrated_sec is not comparable with it.
+CAL_RANGE_ROWS = 5_000_000_000  # ~0.77 s on the anchor host: long enough
+# that per-task scheduling noise (~10 ms) is invisible, short enough that
+# 2x5 reps cost ~11 s per bench session
 CAL_REPS = 5
-CAL_RANGE_ANCHOR_SEC = 0.749  # min-of-5, r15 measurement session, local[32]
+CAL_RANGE_ANCHOR_SEC = 0.749  # min-of-5, anchor host, local[32]
 CAL_SCAN_ANCHOR_SEC = 0.302  # sf0.1 lineitem full-column hash, same session
 
 
@@ -282,21 +286,26 @@ def _calibrate(spark, sf_dir: str) -> dict:
     return {"range_sec": round(rng, 4), "scan_sec": round(scan, 4)}
 
 
+def _floor4(v: float) -> float:
+    # rounding down keeps build + execute <= the total rounded to 4 places
+    return math.floor(v * 1e4) / 1e4
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("transf_spark_bench")
     registry = {**q.queries(), **_serving_surfaces()}
-    # SPARK_GRAFT_HEADLINE="a,b,c" restricts the run — used to re-time a
-    # subset in isolation (round-2 bench drift triage: a 21-query session
-    # slows individual queries vs a 12-query session through JVM/GC contention,
-    # so cross-round comparisons must be same-subset).
+    # SPARK_GRAFT_HEADLINE="a,b,c" times only that subset. A session's other
+    # queries slow each one through JVM and GC contention, so compare only
+    # runs of the same subset.
     subset = os.environ.get("SPARK_GRAFT_HEADLINE")
-    headline = [s.strip() for s in subset.split(",") if s.strip()] if subset else HEADLINE
-    names = [n for n in headline if n in registry]
+    names = [s.strip() for s in subset.split(",") if s.strip()] if subset else HEADLINE
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        raise SystemExit(f"bench.py: unknown SPARK_GRAFT_HEADLINE names: {', '.join(unknown)}")
+    spark = get_spark("transf_spark_bench")
 
-    # Warmup: spin up JVM, codegen paths (parquet reader, decimal agg, joins,
-    # windows) at sf0.001 so timed runs measure steady-state execution, not
-    # first-compile overhead.
+    # Warm-up at sf0.001: JVM start-up and first-time code generation (parquet
+    # reader, decimal aggregates, joins, windows) stay out of the timed reps.
     spark.range(1_000_000).select(F.sum("id")).collect()
     warm_sf = "/root/testdata/sf0.001"
     for name in names:
@@ -308,44 +317,45 @@ def main() -> None:
     prefault(sf_dir)
     cal_start = _calibrate(spark, sf_dir)
 
-    # Timed reps per query, report the min: round-3 triage showed ±26%
-    # total drift between IDENTICAL back-to-back runs on this shared host
-    # (15.4s vs 19.4s for the same 12-query subset) — far larger than any
-    # real plan change. min-of-N measures steady-state plan cost, not host
-    # contention; "reps"/"agg" in the JSON make the protocol explicit.
-    # (min-of-3 since round 5; min-of-5 AND pass-interleaved since round 8:
-    # round 7 measured a 6.2x swing on one unchanged query, meaning a
-    # contention burst can span 3 BACK-TO-BACK reps of the same query.
-    # Interleaving — run the whole set once per pass, take each query's min
-    # ACROSS passes — spreads a query's reps minutes apart, so a burst must
-    # persist for the entire run to contaminate its minimum.)
+    # Min-of-REPS, interleaved: identical back-to-back runs on a shared host
+    # have drifted +-26% in total and 6.2x on one query, more than any real
+    # plan change. Each pass runs the whole set once and a query's number is
+    # its minimum across passes, so its reps lie minutes apart and a burst
+    # must last the entire run to reach its minimum.
     REPS = 5
 
-    # Per-pass wall totals, recorded beside the min-aggregated detail: a
-    # host contention burst shows up as one or two inflated passes while
-    # the mins stay sane, whereas a real regression inflates every pass —
-    # the diagnostic the round-10 like-for-like triage had to reconstruct
-    # from ad-hoc reruns (three full runs of an unchanged suite measured
-    # 1.03-1.22x each other on this shared host).
+    # Per-pass wall totals: a contention burst inflates one or two passes
+    # while the minimums stay sane; a real regression inflates every pass.
     pass_totals: list[float] = []
 
-    def run_set(d: str) -> dict[str, float]:
-        t: dict[str, float] = {}
+    def run_set(d: str) -> tuple[dict[str, float], dict[str, float], dict[str, float]]:
+        """Per-query minimums of (total, build, execute). Build is the
+        query function's call, execute is ``materialize``; each phase keeps
+        its own minimum across passes."""
+        total: dict[str, float] = {}
+        build: dict[str, float] = {}
+        execute: dict[str, float] = {}
         for _ in range(REPS):
             p0 = time.perf_counter()
             for name in names:
                 t0 = time.perf_counter()
-                materialize(registry[name](spark, d))
-                dt = time.perf_counter() - t0
-                if dt < t.get(name, float("inf")):
-                    t[name] = dt
+                df = registry[name](spark, d)
+                t1 = time.perf_counter()
+                materialize(df)
+                t2 = time.perf_counter()
+                for mins, dt in ((total, t2 - t0), (build, t1 - t0), (execute, t2 - t1)):
+                    mins[name] = min(mins.get(name, dt), dt)
             pass_totals.append(round(time.perf_counter() - p0, 3))
-        return {name: round(v, 4) for name, v in t.items()}
+        return (
+            {name: round(v, 4) for name, v in total.items()},
+            {name: _floor4(v) for name, v in build.items()},
+            {name: _floor4(v) for name, v in execute.items()},
+        )
 
-    timings = run_set(sf_dir)
+    timings, build_sec, execute_sec = run_set(sf_dir)
     cal_end = _calibrate(spark, sf_dir)
-    # min over the session's two probe points — a burst inflating one end
-    # doesn't read as a slow host; a factor > 1 on BOTH ends is real
+    # min over the session's two probe points: a burst that inflates one end
+    # does not read as a slow host; a factor > 1 on BOTH ends is real
     cal_rng = min(cal_start["range_sec"], cal_end["range_sec"])
     cal_scan = min(cal_start["scan_sec"], cal_end["scan_sec"])
     host_factor = round(
@@ -363,13 +373,10 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
-    # The emitted line must stay under the driver's ~2 KB stdout tail
-    # capture: BENCH_r05's 70-query dict overflowed it and the headline
-    # parsed as null (round-5 verdict item 3). Keep the slowest queries
-    # inline (they are the ones plan regressions show up in), fold the
-    # long sub-second tail into one {"n", "sec"} bucket, and write the
-    # FULL per-query detail to BENCH_DETAIL.json beside this script so
-    # nothing is lost round-over-round.
+    # The line must fit a ~2 KB stdout tail capture (a 70-query dict once
+    # overflowed it and the headline parsed as null). The slowest queries,
+    # where plan regressions show, stay inline; the sub-second tail folds
+    # into one {"n", "sec"} bucket; BENCH_DETAIL.json keeps every query.
     LINE_BUDGET = 1100  # bytes left for the queries dict on the stdout line
     compact: dict[str, float] = {}
     used = 0
@@ -387,17 +394,16 @@ def main() -> None:
         queries_out["_tail"] = {"n": folded_n, "sec": round(folded_sec, 3)}
 
     # Pinned-subset total (see LIKE_FOR_LIKE): only meaningful on a full
-    # HEADLINE run — a SPARK_GRAFT_HEADLINE subset run omits it rather than
-    # publishing a partial sum that looks like a speedup.
+    # HEADLINE run; a subset run omits it rather than publish a partial sum
+    # that looks like a speedup.
     lfl = None
     if all(n in timings for n in LIKE_FOR_LIKE):
         raw = round(sum(timings[n] for n in LIKE_FOR_LIKE), 3)
         lfl = {
             "n": len(LIKE_FOR_LIKE),
             "sec": raw,
-            # host-normalized total — divide out the calibration factor so
-            # round-over-round movement reads as code, not host (r15+ only:
-            # the r10 anchor predates calibration)
+            # host-normalized total: dividing out the calibration factor
+            # makes movement between runs read as code, not host
             "calibrated_sec": round(raw / host_factor, 3) if host_factor > 0 else None,
             "r10_anchor_sec": LIKE_FOR_LIKE_R10_ANCHOR_SEC,
         }
@@ -411,6 +417,8 @@ def main() -> None:
         "reps": REPS,
         "agg": "min",
         "calibration": calibration,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     if lfl:
         out["like_for_like"] = lfl
@@ -419,29 +427,27 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        # each phase's own min-of-REPS, so build + execute <= queries[name]
+        "build_sec": build_sec,
+        "execute_sec": execute_sec,
         "sf": sf,
         "reps": REPS,
         "agg": "min",
         "like_for_like": {**lfl, "names": list(LIKE_FOR_LIKE)} if lfl else None,
-        # detail keeps BOTH probe points (start/end) — uneven ends flag a
-        # burst that the min already discounted
+        # both probe points: uneven ends flag a burst the min discounted
         "calibration": {**calibration, "start": cal_start, "end": cal_end},
-        # detail-file only (stdout line budget): per-pass wall totals for
-        # noise diagnosis — bursty host ⇒ uneven passes, regression ⇒ all up
-        # (copy: the optional scaling run below appends ITS passes to the
-        # same list, which would silently mix the two fixtures' totals)
+        # a copy: the optional scaling run below appends its own passes
         "pass_totals": list(pass_totals),
     }
-    # Optional second point for the scaling table (README §Scaling): set
-    # SPARK_GRAFT_SCALING_DIR=/root/testdata/sf0.01 to record how each
-    # headline query scales between two SFs — catches nonlinear blowups
-    # (shingle volume, candidate-pair growth) before they bite at 100×.
-    # Detail-file only: the stdout line must stay within the tail capture.
+    # Optional second point for the scaling table (README §Scaling):
+    # SPARK_GRAFT_SCALING_DIR=/root/testdata/sf0.01 records each query's
+    # total at a second scale factor, which shows nonlinear growth (shingle
+    # volume, candidate pairs). Detail file only.
     scaling_dir = os.environ.get("SPARK_GRAFT_SCALING_DIR")
     if scaling_dir:
         prefault(scaling_dir)
         detail["scaling"] = {
-            os.path.basename(scaling_dir.rstrip("/")): run_set(scaling_dir)
+            os.path.basename(scaling_dir.rstrip("/")): run_set(scaling_dir)[0]
         }
     try:
         with open(os.path.join(_REPO, "BENCH_DETAIL.json"), "w") as f:

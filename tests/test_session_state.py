@@ -4,10 +4,10 @@ staging. All of it lives in the session's ``memo`` slots or in the data
 itself, never in process globals or in private keys of the session's conf.
 
 Every case runs at sf0.001 on a ``newSession()``, made the active session
-first (``_reactivate``), and re-activates the main test session afterwards.
-Activation matters for Python DataSources: Spark refuses to register a
-source on a session while the ACTIVE session already has one of that name
-(DATA_SOURCE_ALREADY_EXISTS), and earlier tests register on the main one.
+first (``_reactivate``), and re-activates the main test session afterwards,
+except ``test_datasources_on_an_inactive_session``: Spark refuses to register
+a source that the ACTIVE session already has (DATA_SOURCE_ALREADY_EXISTS),
+and that case checks the engine registers on a session that is not active.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSourceRegistration
 from pyspark.sql.streaming.readwriter import DataStreamWriter
 from pyspark.sql.streaming.state import GroupStateTimeout
@@ -166,3 +167,43 @@ def test_bucketed_table_after_another_process_staged(spark, sf_dir, tmp_path, mo
         spark.sql(f"DROP TABLE IF EXISTS orders_b_{tag}")
         for out in staged:
             shutil.rmtree(out, ignore_errors=True)
+
+
+def _temp_views(s) -> set:
+    return {t.name for t in s.catalog.listTables() if t.isTemporary}
+
+
+def test_memory_sink_drains_leave_no_views(fresh, sf_dir):
+    """Each drain drops its memory-sink view from the stream's session; the
+    DataFrame it returned still reads every row, since its plan holds the
+    sink itself."""
+    docs = load_table(fresh, sf_dir, "documents")
+    emb = load_table(fresh, sf_dir, "embeddings")
+    want = {
+        windows.stream_dedup_exact: docs.select(F.sha2("text", 256)).distinct().count(),
+        windows.stream_static_enrich: docs.join(emb, docs.doc_id == emb.vec_id).count(),
+    }
+    before = _temp_views(fresh)
+    got = [(build, build(fresh, sf_dir)) for build in want for _ in range(3)]
+    assert _temp_views(fresh) == before
+    assert not fresh.streams.active
+    for build, df in got:
+        assert df.count() == want[build] > 0, build.__name__
+
+
+def test_datasources_on_an_inactive_session(spark, sf_dir):
+    """The main session registers all three Python DataSources first; a
+    session that is not the active one then registers and reads its own."""
+    builds = (
+        scan_python_datasource,
+        formats.scan_avro_roundtrip,
+        formats.scan_avro_logical_typed,
+    )
+    _reactivate(spark)
+    want = [sorted(build(spark, sf_dir).collect()) for build in builds]
+    other = spark.newSession()
+    try:
+        got = [sorted(build(other, sf_dir).collect()) for build in builds]
+        assert got == want
+    finally:
+        _reactivate(spark)

@@ -59,13 +59,26 @@ def _register_datasource(spark: SparkSession, source_cls) -> None:
     keyed on its name. Registrations are per session, like memo slots.
     Each ``register()`` re-ships the pickled class to the JVM and logs a
     DataSourceManager 'replaced' WARN, which a bench pass would pay 5x and
-    a shared session once per query."""
-    memo(
-        spark,
-        ("datasource", source_cls.name()),
-        None,
-        lambda: spark.dataSource.register(source_cls),
-    )
+    a shared session once per query.
+
+    Spark rejects a name that the thread's ACTIVE session already resolves
+    (DATA_SOURCE_ALREADY_EXISTS), while a read resolves through the reading
+    session's own registry, so ``spark`` is made active for the register
+    and the previous active session is restored after it."""
+
+    def register() -> None:
+        jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+        previous = jsession.getActiveSession()
+        jsession.setActiveSession(spark._jsparkSession)
+        try:
+            spark.dataSource.register(source_cls)
+        finally:
+            if previous.isDefined():
+                jsession.setActiveSession(previous.get())
+            else:
+                jsession.clearActiveSession()
+
+    memo(spark, ("datasource", source_cls.name()), None, register)
 
 
 def _staged_dir(spark: SparkSession, sf_dir: str, fmt: str) -> str:

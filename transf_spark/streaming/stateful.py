@@ -29,6 +29,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from transf_spark.queries import register
 from transf_spark.sources import fixtures
+from transf_spark.streaming.windows import drain_to_memory, read_memory_sink
 
 # Unioned protocol-event schema (SURVEY.md §1.5): HS + TRANSFER frames.
 EVENT_SCHEMA = T.StructType(
@@ -301,9 +302,7 @@ def run_stateful_reassembly(
     if timeout_conf == GroupStateTimeout.NoTimeout:
         # no timeouts armed ⇒ availableNow terminates once inputs are
         # drained; the shared fail-loud drain helper owns sink naming
-        from transf_spark.streaming.windows import drain_to_memory
-
-        return drain_to_memory(out, "stateful_reassembly", drain)
+        return drain_to_memory(out, "stateful_reassembly")
     # With ProcessingTimeTimeout armed the engine must keep triggering
     # batches to service future timeouts, so no self-terminating trigger
     # exists (availableNow spins empty batches forever). Run a steady
@@ -338,7 +337,7 @@ def run_stateful_reassembly(
             f"{qname}: state store did not drain within the "
             f"ProcessingTimeTimeout deadline"
         )
-    return drain.table(qname)
+    return read_memory_sink(drain, qname)
 
 
 # Closed-form SQL twin of the state machine (round 11: the last rows-only

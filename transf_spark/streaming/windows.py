@@ -167,16 +167,16 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ACK_BASE_MS = 1_700_000_000_000
 
 
-def drain_to_memory(stream_df, name: str, reader) -> "DataFrame":
+def drain_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
     """AvailableNow drain into a memory sink named ``{name}_{uuid4 hex}``,
-    FAIL-LOUD.
+    FAIL-LOUD, read back through ``read_memory_sink``.
 
     A unique name keeps a later drain from replacing the memory temp view
     behind a DataFrame an earlier drain returned. Fail-loud: a False
     ``awaitTermination`` means a partially-populated sink, which would
-    silently corrupt the oracle check, so it raises instead. Every drain
-    site goes through this one helper. ``reader`` is the session whose
-    ``.table()`` reads the sink back (the dedicated drain session where
+    silently corrupt the oracle check, so it raises instead. Every
+    AvailableNow drain site goes through this one helper; the sink's view
+    lives on the stream's own session (the dedicated drain session where
     one is used)."""
     qname = f"{name}_{uuid.uuid4().hex}"
     q = (
@@ -189,7 +189,17 @@ def drain_to_memory(stream_df, name: str, reader) -> "DataFrame":
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(f"{qname}: AvailableNow drain exceeded 300 s")
-    return reader.table(qname)
+    return read_memory_sink(stream_df.sparkSession, qname)
+
+
+def read_memory_sink(session: SparkSession, qname: str) -> DataFrame:
+    """The rows of the finished memory sink ``qname``, with its temp view
+    dropped from ``session``. The returned DataFrame's plan holds the sink
+    itself, so it still reads every row after the drop, and the rows go
+    when the DataFrame does instead of living as long as the session."""
+    df = session.table(qname)
+    session.catalog.dropTempView(qname)
+    return df
 
 
 def ack_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -326,7 +336,7 @@ def stream_ack_verify_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.next_expected").alias("next_expected"),
         )
     )
-    return drain_to_memory(joined, "ack_verify_join", drain)
+    return drain_to_memory(joined, "ack_verify_join")
 
 
 
@@ -356,7 +366,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.sha2("text", 256).alias("text_sha"))
         .dropDuplicates(["text_sha"])
     )
-    return drain_to_memory(stream, "stream_dedup", spark)
+    return drain_to_memory(stream, "stream_dedup")
 
 
 @register(
@@ -473,7 +483,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(emb, F.col("doc_id") == F.col("vec_id"))
         .select("doc_id", "lang", "label", "emb_dim")
     )
-    return drain_to_memory(stream, "stream_static_enrich", spark)
+    return drain_to_memory(stream, "stream_static_enrich")
 
 
 @register(
