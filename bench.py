@@ -256,16 +256,27 @@ def prefault(d: str) -> None:
 # the fixture's lineitem (page-cache read + decode). Each runs min-of-
 # CAL_REPS before and after the timed reps; the artifact carries both points
 # and host_factor = geomean over the two probes of min(start, end) / anchor.
-# The anchors come from a quiet local[32] host, so host_factor ~ 1.0 means an
-# anchor-speed host, and a like_for_like total that moved 1.2x with
-# host_factor 1.2 is flat code. The like_for_like anchor predates the
-# probes, so calibrated_sec is not comparable with it.
+# The anchors come from a quiet local[CAL_ANCHOR_CPUS] host. The range probe
+# splits its rows over every core, so its anchor is scaled to the session's
+# core count; the scan probe reads one single-row-group file in one task and
+# is compared as is. host_factor ~ 1.0 then means an anchor-speed core, and
+# a like_for_like total that moved 1.2x with host_factor 1.2 is flat code.
+# The like_for_like anchor predates the probes, so calibrated_sec is not
+# comparable with it.
 CAL_RANGE_ROWS = 5_000_000_000  # ~0.77 s on the anchor host: long enough
 # that per-task scheduling noise (~10 ms) is invisible, short enough that
 # 2x5 reps cost ~11 s per bench session
 CAL_REPS = 5
 CAL_RANGE_ANCHOR_SEC = 0.749  # min-of-5, anchor host, local[32]
 CAL_SCAN_ANCHOR_SEC = 0.302  # sf0.1 lineitem full-column hash, same session
+CAL_ANCHOR_CPUS = 32
+
+
+def host_factor(range_sec: float, scan_sec: float, cpus: int) -> float:
+    """Geomean over the two probes of probe time / anchor time, with the
+    range anchor scaled from ``CAL_ANCHOR_CPUS`` cores to ``cpus``."""
+    range_anchor = CAL_RANGE_ANCHOR_SEC * CAL_ANCHOR_CPUS / cpus
+    return round(((range_sec / range_anchor) * (scan_sec / CAL_SCAN_ANCHOR_SEC)) ** 0.5, 3)
 
 
 def _calibrate(spark, sf_dir: str) -> dict:
@@ -358,17 +369,11 @@ def main() -> None:
     # does not read as a slow host; a factor > 1 on BOTH ends is real
     cal_rng = min(cal_start["range_sec"], cal_end["range_sec"])
     cal_scan = min(cal_start["scan_sec"], cal_end["scan_sec"])
-    host_factor = round(
-        (
-            (cal_rng / CAL_RANGE_ANCHOR_SEC) * (cal_scan / CAL_SCAN_ANCHOR_SEC)
-        )
-        ** 0.5,
-        3,
-    )
+    factor = host_factor(cal_rng, cal_scan, spark.sparkContext.defaultParallelism)
     calibration = {
         "range_sec": round(cal_rng, 4),
         "scan_sec": round(cal_scan, 4),
-        "host_factor": host_factor,
+        "host_factor": factor,
     }
     total = round(sum(timings.values()), 3)
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -404,7 +409,7 @@ def main() -> None:
             "sec": raw,
             # host-normalized total: dividing out the calibration factor
             # makes movement between runs read as code, not host
-            "calibrated_sec": round(raw / host_factor, 3) if host_factor > 0 else None,
+            "calibrated_sec": round(raw / factor, 3) if factor > 0 else None,
             "r10_anchor_sec": LIKE_FOR_LIKE_R10_ANCHOR_SEC,
         }
 

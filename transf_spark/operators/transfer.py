@@ -15,7 +15,7 @@ multi-GB single transfers the documented scale path is bucketed chunk files
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from transf_spark.functions.exprs import basename, chunk_slices
 from transf_spark.queries import register
@@ -145,6 +145,25 @@ def scan_binary_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def reject_ladder(filename: Column) -> tuple[Column, Column]:
+    """The reference's filename reject ladder
+    (`transf_server.cpp:164-168`) as ``(verdict, rejected)``:
+    ``verdict`` names the first rung ``filename`` fails (empty → absolute →
+    traversal) or is ``'accept'``; ``rejected`` is true when any rung
+    fails. The one definition :func:`filter_path_security` and the
+    stateful stream's batch cross-check share."""
+    is_empty = F.length(filename) == 0
+    is_abs = filename.startswith("/")
+    is_trav = filename.contains("..")
+    verdict = (
+        F.when(is_empty, "reject_empty")
+        .when(is_abs, "reject_absolute")
+        .when(is_trav, "reject_traversal")
+        .otherwise("accept")
+    )
+    return verdict, is_empty | is_abs | is_trav
+
+
 @register(
     "filter_path_security",
     oracle=f"""
@@ -169,20 +188,12 @@ def filter_path_security(spark: SparkSession, sf_dir: str) -> DataFrame:
     a verdict tag instead of being dropped, mirroring the server's REJECT
     reply."""
     hs = fixtures.handshakes(spark, sf_dir)
-    is_empty = F.length("filename") == 0
-    is_abs = F.col("filename").startswith("/")
-    is_trav = F.col("filename").contains("..")
-    verdict = (
-        F.when(is_empty, "reject_empty")
-        .when(is_abs, "reject_absolute")
-        .when(is_trav, "reject_traversal")
-        .otherwise("accept")
-    )
+    verdict, rejected = reject_ladder(F.col("filename"))
     return hs.select(
         "transfer_id",
         "filename",
         verdict.alias("verdict"),
-        F.when(is_empty | is_abs | is_trav, F.lit(None)).otherwise(basename("filename")).alias("fn_base"),
+        F.when(rejected, F.lit(None)).otherwise(basename("filename")).alias("fn_base"),
     )
 
 
@@ -314,6 +325,43 @@ def reassembly_ordered_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def accepted_progress(chunks: DataFrame, handshakes: DataFrame) -> tuple[DataFrame, Column]:
+    """The state machine's progress in closed form over a (chunks,
+    handshakes) pair, both keyed by ``transfer_id``:
+
+    1. duplicate-drop per (transfer, seq) (≈ stop-and-wait re-send
+       rejection, `transf_server.cpp:268-273`);
+    2. accepted prefix = rows where row_number-by-seq == seq (a later chunk
+       after a hole is rejected, exactly like the seq verifier);
+    3. ``written_raw`` = sum of accepted payloads, ``n_rejected`` = chunks
+       past the first hole.
+
+    Returns ``handshakes`` inner-joined to those two per-transfer columns,
+    and the ``written`` Column over that frame: ``written_raw`` clamped to
+    ``[0, filesize]`` (`transf_server.cpp:277-294`). The
+    lower clamp matches the state machine, which clamps every chunk write
+    to >= 0, so a degenerate negative filesize reports written = 0 on both
+    sides. A transfer is done when ``written >= filesize``. The one
+    definition :func:`completion_manifest` and the stateful stream's batch
+    cross-check share."""
+    w = W.partitionBy("transfer_id").orderBy("seq")
+    acc = (
+        chunks.dropDuplicates(["transfer_id", "seq"])
+        .withColumn("rn", F.row_number().over(w))
+        .groupBy("transfer_id")
+        .agg(
+            F.sum(F.when(F.col("rn") == F.col("seq"), F.col("payload_len")).otherwise(0))
+            .cast("long")
+            .alias("written_raw"),
+            F.sum(F.when(F.col("rn") != F.col("seq"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_rejected"),
+        )
+    )
+    written = F.greatest(F.least(F.col("filesize"), F.col("written_raw")), F.lit(0))
+    return acc.join(handshakes, "transfer_id"), written
+
+
 @register(
     "completion_manifest",
     oracle=f"""
@@ -346,16 +394,12 @@ def reassembly_ordered_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
 def completion_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole server state machine, batch form:
 
-    1. duplicate-drop (``dropDuplicates`` ≈ stop-and-wait re-send rejection,
-       `/root/reference/transf_server.cpp:268-273`);
-    2. accepted prefix = rows where row_number == seq (a later chunk after a
-       hole is rejected, exactly like the seq verifier);
-    3. written = clamped sum of accepted payloads
-       (`/root/reference/transf_server.cpp:277-294`);
-    4. status: done (`written >= filesize`,
-       `/root/reference/transf_server.cpp:296-316`), else expired when the
-       handshake is older than the GC horizon
-       (`/root/reference/transf_server.cpp:78-131`), else pending.
+    1. duplicate-drop → accepted prefix → clamped ``written``, the closed
+       form of :func:`accepted_progress` over the faulty chunks and the
+       handshakes;
+    2. status: done (`written >= filesize`, `transf_server.cpp:296-316`),
+       else expired when the handshake is older than the GC horizon
+       (`transf_server.cpp:78-131`), else pending.
     """
     c = fixtures.chunks_faulty(spark, sf_dir)
     h = fixtures.handshakes(spark, sf_dir)
@@ -363,30 +407,9 @@ def completion_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon = events.agg(
         (F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("horizon")
     )
-    w = W.partitionBy("transfer_id").orderBy("seq")
-    acc = (
-        c.dropDuplicates(["transfer_id", "seq"])
-        .withColumn("rn", F.row_number().over(w))
-        .groupBy("transfer_id")
-        .agg(
-            F.sum(F.when(F.col("rn") == F.col("seq"), F.col("payload_len")).otherwise(0))
-            .cast("long")
-            .alias("written_raw"),
-            F.sum(F.when(F.col("rn") != F.col("seq"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_rejected"),
-        )
-    )
-    # greatest(..., 0): the streaming state machine clamps every chunk
-    # write to >= 0 (the reference's size clamp), so a degenerate NEGATIVE
-    # filesize (the faulty-fixture generator can understate by 10) reports
-    # written = 0 there — the batch twin must clamp identically or the
-    # stream's embedded batch_consistent cross-check flips false on a
-    # correct run (round-5 review; fixture-dependent today).
-    written = F.greatest(F.least(F.col("filesize"), F.col("written_raw")), F.lit(0))
+    progress, written = accepted_progress(c, h.select("transfer_id", "filesize", "ts"))
     return (
-        acc.join(h.select("transfer_id", "filesize", "ts"), "transfer_id")
-        .crossJoin(F.broadcast(horizon))
+        progress.crossJoin(F.broadcast(horizon))
         .select(
             "transfer_id",
             "filesize",

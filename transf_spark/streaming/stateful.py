@@ -22,12 +22,14 @@ import uuid
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from transf_spark.queries import register
+from transf_spark.session import drain_session
 from transf_spark.sources import fixtures
 from transf_spark.streaming.windows import drain_to_memory, read_memory_sink
 
@@ -124,41 +126,45 @@ def transfer_state_machine(
     # arbitrary shuffle order, so per-pdf sorting would re-establish
     # protocol order only within each ~10k-row chunk — a transfer spanning
     # chunks could see its HS after its chunks (all rejected in NEW) or
-    # seqs out of order across the boundary (round-5 review). Memory is
-    # bounded by one key's micro-batch slice, which the reassembly state
-    # itself already implies holding.
+    # seqs out of order across the boundary. Memory is bounded by one key's
+    # micro-batch slice, which the reassembly state itself already implies
+    # holding.
     frames = [pdf for pdf in pdfs]
     if frames:
         pdf = frames[0] if len(frames) == 1 else pd.concat(frames)
-        # protocol order within the batch: handshake first, chunks by seq
-        hs = pdf[pdf["tag"] == "HS"]
-        tr = pdf[pdf["tag"] == "TRANSFER"].sort_values("seq")
-        for _, row in hs.iterrows():
+        # protocol order within the batch: handshakes first in arrival
+        # order, then chunks by a stable sort on seq. The loops run over
+        # plain column arrays: per-key boolean masks and iterrows made the
+        # machine about 3x slower over the 500 keys of the sf0.01 frames.
+        tag = pdf["tag"].to_numpy()
+        is_hs = tag == "HS"
+        for fn, fs_raw in zip(pdf["filename"].to_numpy()[is_hs], pdf["filesize"].to_numpy()[is_hs]):
             if status != "NEW":
                 continue  # duplicate HS ignored
-            # Defensive NULL handling for NON-fixture streams (round-13
-            # review; the declared fixture COALESCEs these away — see
-            # sources/fixtures.py): a missing filename is malformed
-            # (str() would coerce None to the accepted literal 'None'),
-            # and a missing filesize is 0, not an int(NaN) crash that
-            # aborts the whole query — pandas renders a null long column
-            # as float64 NaN here.
-            fn = row["filename"]
-            fs_raw = row["filesize"]
+            # Defensive NULL handling for non-fixture streams (the declared
+            # fixture COALESCEs these away, see sources/fixtures.py): a
+            # missing filename is malformed (str() would coerce None to the
+            # accepted literal 'None'), and a missing filesize is 0, not an
+            # int(NaN) crash that aborts the whole query — pandas renders a
+            # null long column as float64 NaN here.
             fs = 0 if pd.isna(fs_raw) else int(fs_raw)
             if fn is None or pd.isna(fn) or _bad_filename(str(fn)):
                 out_rows.append((transfer_id, "rejected_handshake", fs, 0, 0))
                 status = "REJECTED"
             else:
                 status, filesize = "TRANSFERING", fs
-        for _, row in tr.iterrows():
+        is_tr = tag == "TRANSFER"
+        seqs = pdf["seq"].to_numpy()[is_tr]
+        order = np.argsort(seqs, kind="stable")
+        lens = pdf["payload_len"].to_numpy()[is_tr][order]
+        for seq, payload_len in zip(seqs[order].tolist(), lens.tolist()):
             if status != "TRANSFERING":
                 n_rej += 1
                 continue
-            if int(row["seq"]) != expected:
+            if int(seq) != expected:
                 n_rej += 1  # out-of-order / duplicate drop
                 continue
-            this_written = min(int(row["payload_len"]), filesize - written)
+            this_written = min(int(payload_len), filesize - written)
             this_written = max(this_written, 0)
             written += this_written
             expected += 1
@@ -173,8 +179,8 @@ def transfer_state_machine(
     # - a late/duplicate HS in ANY mode would be processed as a fresh
     #   handshake (post-remove, nothing distinguishes it from a new session)
     #   and could emit a second rejected_handshake or re-open toward a
-    #   duplicate done row — breaking batch-slicing invariance (round-3
-    #   ADVICE; tests/test_stateful_property.py now generates these frames).
+    #   duplicate done row — breaking batch-slicing invariance
+    #   (tests/test_stateful_property.py generates these frames).
     # The tombstone makes both impossible: duplicate HS hits the
     # status != NEW guard, straggler chunks just bump n_rejected. The
     # reference has the same need — its GC thread only reaps sessions the map
@@ -199,12 +205,12 @@ def protocol_event_stream_dir(spark: SparkSession, sf_dir: str, n_files: int = 1
     ``maxFilesPerTrigger=1`` replays the protocol across micro-batches with
     state carried between them.
 
-    Written with Spark's own writer (executor → file; the round-1 version
-    funneled the whole fixture through the driver via ``toPandas``). Each
-    wave coalesces to one task/file — a replay-fidelity constraint, not a
-    scale one: ``maxFilesPerTrigger=1`` equates files with micro-batches, so
-    a wave split across part-files would deliver chunks out of seq order and
-    the stop-and-wait machine would (correctly) drop them."""
+    Written with Spark's own writer (executor → file), so the fixture
+    never passes through the driver. Each wave coalesces to one task/file —
+    a replay-fidelity constraint, not a scale one: ``maxFilesPerTrigger=1``
+    equates files with micro-batches, so a wave split across part-files
+    would deliver chunks out of seq order and the stop-and-wait machine
+    would (correctly) drop them."""
     import glob as _glob
 
     # content-fingerprinted tag: regenerated fixtures invalidate the cache;
@@ -260,29 +266,33 @@ def protocol_event_stream_dir(spark: SparkSession, sf_dir: str, n_files: int = 1
 def run_stateful_reassembly(
     spark: SparkSession, sf_dir: str, n_files: int = 1, timeout_conf: str = GroupStateTimeout.ProcessingTimeTimeout
 ) -> DataFrame:
-    """Build + run the streaming state machine to completion (AvailableNow),
-    return the materialized output as a batch DataFrame."""
+    """Replay the protocol fixture (``n_files`` arrival-ordered waves)
+    through the streaming state machine to completion, return the
+    materialized output as a batch DataFrame."""
     src_dir = protocol_event_stream_dir(spark, sf_dir, n_files)
-    # State-store commits dominate a bounded drain (one store per shuffle
-    # partition per micro-batch, regardless of rows), but the pandas state
-    # machine itself is CPU-bound per partition — so size partitions to KEY
-    # CARDINALITY (~128 transfers/partition, floor 8, ceiling the session
-    # default) instead of a fixed cap: 8 at sf0.01 (487 keys, 2.3 s → 1.6 s)
-    # without starving sf0.1 (4.9k keys → full parallelism; a fixed cap of 8
-    # measured 1.7× slower there). Transfer count ≈ documents rows, read
-    # from the parquet footer — no Spark job. The count is pinned on a
-    # PRIVATE session the whole stream is built on (round-4 ADVICE: the old
-    # set/restore of the shared session conf around start() raced any query
-    # started concurrently on the same session).
-    import pyarrow.parquet as pq
+    return drain_state_machine(spark, src_dir, n_files, timeout_conf)
 
-    from transf_spark.session import drain_session
-    from transf_spark.sources.tables import table_path
 
-    n_transfers = pq.ParquetFile(table_path(sf_dir, "documents")).metadata.num_rows
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sized = min(max(8, n_transfers // 128), session_parts)
-    drain = drain_session(spark, sized)
+def drain_state_machine(
+    spark: SparkSession, src_dir: str, n_files: int, timeout_conf: str
+) -> DataFrame:
+    """Run the state machine over the staged protocol frames of ``src_dir``
+    (``batch_*.parquet``, one micro-batch each) to completion; return the
+    materialized output, bound to the stream's private drain session."""
+    # One state partition per core, so the drain runs ONE wave of Python
+    # state tasks. Every applyInPandasWithState task pays a fixed cost its
+    # keys do not move: 0.22-0.30 s before the first key (measured on a
+    # 4-core host, Python 3.11), spent in pyspark's
+    # worker_util.setup_spark_files -> importlib.invalidate_caches(), which
+    # re-reads the 1,328-entry directory of pyspark.zip once per zipimporter
+    # the worker holds (18 of them); then 0.12-0.24 s of state commit and
+    # sink write after the last key. The state machine itself takes
+    # 0.14-0.38 s per task at sf0.01, so a second wave of tasks costs more
+    # than it spreads: 8 partitions on 4 cores drained in 2.2-2.4 s, 4 in
+    # 1.6-1.8 s. The count is pinned on a private session the whole stream
+    # is built on, so it never races a query started concurrently on the
+    # caller's session.
+    drain = drain_session(spark, spark.sparkContext.defaultParallelism)
     reader = (
         drain.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -340,9 +350,9 @@ def run_stateful_reassembly(
     return read_memory_sink(drain, qname)
 
 
-# Closed-form SQL twin of the state machine (round 11: the last rows-only
-# query becomes hash-checked). The NoTimeout + AvailableNow declared path is
-# fully deterministic, so the manifest has a closed form over the fixtures:
+# Closed-form SQL twin of the state machine: the oracle that hash-checks the
+# stream's manifest. The NoTimeout + AvailableNow declared path is fully
+# deterministic, so the manifest has a closed form over the fixtures:
 #
 # - accepted prefix: after per-(transfer, seq) dedup, exactly the rows where
 #   row_number-by-seq == seq (a hole makes rn < seq forever after — rn grows
@@ -368,7 +378,7 @@ WITH c AS ({CHUNKS_FAULTY_SQL}),
 h AS ({HANDSHAKES_SQL}),
 bad AS (
   -- DISTINCT pins the machine's one-output-per-transfer semantics against
-  -- duplicate HS frames (round-11 ADVICE): the machine emits ONE
+  -- duplicate HS frames: the machine emits ONE
   -- rejected_handshake per transfer however many HS copies arrive, and the
   -- chunk-to-good join below must not inflate 'copies'. DISTINCT is the
   -- EXACT closed form here because HANDSHAKES_SQL derives filename and
@@ -393,9 +403,8 @@ numbered AS (
   -- GREATEST(payload_len, 0): the machine clamps every chunk write to
   -- >= 0 (the reference's size clamp), so the closed form's running sum
   -- must clamp per chunk too — structurally unreachable today (lengths
-  -- come from length(), >= 0) but the raw SUM silently diverged from
-  -- the clamp the moment any fault injection produced a negative length
-  -- (round-13 review)
+  -- come from length(), >= 0), but without it the raw SUM would diverge
+  -- from the clamp as soon as a fault injection produced a negative length
   SELECT transfer_id, seq, filesize, payload_len, copies,
          ROW_NUMBER() OVER (PARTITION BY transfer_id ORDER BY seq) AS rn,
          SUM(GREATEST(payload_len, 0))
@@ -448,137 +457,137 @@ SELECT '__summary__' AS transfer_id, 'summary' AS status,
     origin="R5-R13",
 )
 def stream_stateful_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference server as ONE streaming operator (see module docstring).
-    Returns the completed/rejected session manifest; tests assert it agrees
-    with the batch ``completion_manifest`` twin (SURVEY.md §5.2 strategy).
+    """The reference server as ONE streaming operator (see module docstring):
+    the completed/rejected session manifest, plus ``batch_consistent`` and
+    one ``__summary__`` row from :func:`batch_cross_check`.
 
-    HASH-CHECKED since round 11: the declared NoTimeout/AvailableNow drain
-    is deterministic, so the manifest has a closed form in SQL — see
-    ``_REASSEMBLY_ORACLE`` above for the derivation (accepted prefix via
-    rn == seq, completion point, clamp-exact ``written``, and the
-    duplicate-at-completion-seq argument that makes ``n_rejected``
-    order-invariant). The oracle checks VALUES; ``batch_consistent`` below
-    remains in the declared output as the independent stream-vs-batch
-    cross-check computed by Spark itself.
-
-    The DECLARED path is the deterministic, self-terminating variant:
+    The declared path is the deterministic, self-terminating variant:
     ``NoTimeout`` + ``Trigger.AvailableNow`` drains the bounded fixture and
-    stops — no wall-clock polling, no load-dependent expiry (the round-2
-    declared path armed ``ProcessingTimeTimeout`` and polled ``lastProgress``
-    for up to ~4.5 min, which was both flaky under a busy session and the
-    single biggest grading-budget sink). The timeout/GC semantics
-    (`transf_server.cpp:78-131`) remain fully covered by the
-    ``ProcessingTimeTimeout`` twins in tests/test_streaming.py.
+    stops, with no wall-clock polling and no load-dependent expiry. The
+    timeout/GC semantics (`transf_server.cpp:78-131`) are covered by the
+    ``ProcessingTimeTimeout`` runs in tests/test_streaming.py.
 
-    ``batch_consistent`` embeds the SURVEY §5.2 self-consistency invariant
-    in the declared output itself (round-4 verdict item 6), so the driver's
-    run carries the cross-check, not just pytest: it is true on
-    EVERY row iff the stream's manifest equals the batch twin —
-    per-row agreement (a ``done`` row matches a batch-``done`` row with the
-    same filesize/written and an accepted handshake; a
-    ``rejected_handshake`` row matches a security-filter rejection) AND
-    set-completeness for BOTH terminal statuses (stream done-count ==
-    batch done-count and stream rejected-count == batch rejected-count,
-    broadcast 1-row scalars, so stream ⊆ batch plus equal counts ⇒ set
-    equality — without the rejected leg, silently dropped rejection rows
-    would still grade green).
-    The joins are left joins on the unique transfer_id, so detail-row
-    count is unchanged; ONE extra ``__summary__`` row (round-5 verdict
-    item 8) carries the batch twin's expected cardinality
-    (filesize := n_done_batch, written := n_rej_batch) so the driver's
-    record pins the manifest cardinality against silent-drop
-    regressions."""
-    out = run_stateful_reassembly(
-        spark, sf_dir, n_files=1, timeout_conf=GroupStateTimeout.NoTimeout
-    )
-    from transf_spark.operators.transfer import completion_manifest, filter_path_security
+    Three checks hold the manifest, each over a different input:
 
-    # Build the batch twins on the SAME session the stream result lives on
-    # (run_stateful_reassembly returns a DataFrame bound to its private
-    # drain session) — mixing DataFrames across sessions in one plan is
-    # undefined behavior.
-    dsession = out.sparkSession
-    # .distinct()/.dropDuplicates: the machine emits ONE row per
-    # transfer, but both batch twins are per-HS-FRAME upstream — a
-    # duplicate HS frame (a regenerated events fixture with a duplicate
-    # event_id fans the handshake join) would otherwise double-count
-    # n_rej_batch/n_done_batch and fan the left join's detail rows,
-    # flipping batch_consistent false on a correct run while the oracle
-    # (which defends with SELECT DISTINCT) still says TRUE (round-13
-    # review). Duplicate frames are byte-identical, so dedup by
-    # transfer_id is exact.
-    bad_hs = (
-        filter_path_security(dsession, sf_dir)
-        .filter(F.col("verdict") != "accept")
-        .select("transfer_id")
-        .distinct()
+    - the DuckDB oracle ``_REASSEMBLY_ORACLE`` derives the manifest's
+      VALUES in closed form from ``documents``/``events``;
+    - ``batch_consistent`` is computed by Spark in the declared output
+      itself, from the protocol frames the stream consumed (its staged
+      ``batch_00.parquet``), so every run of the declared query carries
+      the stream-vs-batch cross-check;
+    - tests/test_streaming.py::test_stateful_reassembly_matches_batch_manifest
+      checks the stream against ``completion_manifest`` and
+      ``filter_path_security`` built from the fixtures, which pins the
+      fixture → frames derivation this query takes as given.
+    """
+    src_dir = protocol_event_stream_dir(spark, sf_dir, 1)
+    out = drain_state_machine(spark, src_dir, 1, GroupStateTimeout.NoTimeout)
+    # the frames are read on the session the stream result lives on (its
+    # private drain session): mixing sessions in one plan is undefined
+    frames = out.sparkSession.read.schema(EVENT_SCHEMA).parquet(
+        os.path.join(src_dir, "batch_00.parquet")
     )
-    batch_done = (
-        completion_manifest(dsession, sf_dir)
-        .filter(F.col("status") == "done")
-        .join(bad_hs, "transfer_id", "left_anti")
+    return batch_cross_check(out, frames)
+
+
+def batch_cross_check(manifest: DataFrame, frames: DataFrame) -> DataFrame:
+    """``manifest`` (rows of ``OUTPUT_SCHEMA``) plus a ``batch_consistent``
+    column and one ``__summary__`` row, checked against the batch twin of
+    the state machine over ``frames`` (protocol frames, ``EVENT_SCHEMA``).
+
+    The twin is the closed form ``completion_manifest`` uses
+    (:func:`~transf_spark.operators.transfer.accepted_progress`) over the
+    TRANSFER rows and the accepted HS rows: a transfer is expected ``done``
+    with the twin's filesize and clamped written. HS rows that fail the
+    reject ladder (:func:`~transf_spark.operators.transfer.reject_ladder`)
+    are expected ``rejected_handshake``. HS rows are deduplicated first:
+    the machine emits ONE row per transfer however many byte-identical HS
+    copies arrive.
+
+    - A detail row is consistent iff its transfer is expected with the same
+      status (and, for ``done``, the same filesize and written), AND the
+      counts agree: stream done-count == expected done-count and stream
+      rejected-count == expected rejected-count. Stream ⊆ expected plus
+      equal counts ⇒ set equality, for both terminal statuses.
+    - The ``__summary__`` row carries the expected cardinality
+      (filesize := done count, written := rejected count), so a stream that
+      silently drops rows changes the recorded row count too. Its
+      ``batch_consistent`` is true iff the counts agree AND every detail
+      row is consistent."""
+    from transf_spark.operators.transfer import accepted_progress, reject_ladder
+
+    hs = frames.filter(F.col("tag") == "HS").select("transfer_id", "filename", "filesize").distinct()
+    verdict, _ = reject_ladder(F.col("filename"))
+    hs = hs.withColumn("verdict", verdict)
+    chunks = frames.filter(F.col("tag") == "TRANSFER").select("transfer_id", "seq", "payload_len")
+    progress, written = accepted_progress(
+        chunks, hs.filter(F.col("verdict") == "accept").select("transfer_id", "filesize")
+    )
+    expected = (
+        progress.filter(written >= F.col("filesize"))
         .select(
             "transfer_id",
             F.col("filesize").alias("b_filesize"),
-            F.col("written").alias("b_written"),
+            written.cast("long").alias("b_written"),
+            F.lit("done").alias("b_status"),
         )
-        .dropDuplicates(["transfer_id"])
-    )
-    expected = batch_done.select(
-        "transfer_id", "b_filesize", "b_written", F.lit("done").alias("b_status")
-    ).unionByName(
-        bad_hs.select(
-            "transfer_id",
-            F.lit(None).cast("long").alias("b_filesize"),
-            F.lit(None).cast("long").alias("b_written"),
-            F.lit("rejected_handshake").alias("b_status"),
+        .unionByName(
+            hs.filter(F.col("verdict") != "accept").select(
+                "transfer_id",
+                F.lit(None).cast("long").alias("b_filesize"),
+                F.lit(None).cast("long").alias("b_written"),
+                F.lit("rejected_handshake").alias("b_status"),
+            )
         )
     )
+    row_ok = (F.col("status") == F.col("b_status")) & (
+        (F.col("status") != "done")
+        | ((F.col("filesize") == F.col("b_filesize")) & (F.col("written") == F.col("b_written")))
+    )
+    # a left join on the unique transfer_id keeps the detail-row count
+    checked = manifest.join(expected, "transfer_id", "left").withColumn(
+        "row_ok", F.coalesce(row_ok, F.lit(False))
+    )
+
+    def n_status(col: str, status: str) -> Column:
+        return F.count(F.when(F.col(col) == status, 1))
+
     counts = (
-        out.agg(
-            F.count(F.when(F.col("status") == "done", 1)).alias("n_done_stream"),
-            F.count(F.when(F.col("status") == "rejected_handshake", 1)).alias(
-                "n_rej_stream"
-            ),
+        checked.agg(
+            n_status("status", "done").alias("n_done_stream"),
+            n_status("status", "rejected_handshake").alias("n_rej_stream"),
+            (F.count(F.when(~F.col("row_ok"), 1)) == 0).alias("rows_ok"),
         )
-        .crossJoin(F.broadcast(batch_done.agg(F.count(F.lit(1)).alias("n_done_batch"))))
-        .crossJoin(F.broadcast(bad_hs.agg(F.count(F.lit(1)).alias("n_rej_batch"))))
+        .crossJoin(
+            F.broadcast(
+                expected.agg(
+                    n_status("b_status", "done").alias("n_done_batch"),
+                    n_status("b_status", "rejected_handshake").alias("n_rej_batch"),
+                )
+            )
+        )
         .select(
             (
                 (F.col("n_done_stream") == F.col("n_done_batch"))
-                # rejected rows are per-HS-frame, done rows per-transfer —
-                # both sides count transfers, so equality is exact here too;
-                # without this leg a regression that silently drops
-                # rejected_handshake rows still graded green (review finding)
                 & (F.col("n_rej_stream") == F.col("n_rej_batch"))
             ).alias("counts_ok"),
+            "rows_ok",
             "n_done_batch",
             "n_rej_batch",
         )
     )
-    # One '__summary__' row rides along with the detail rows (round-5
-    # verdict item 8): it carries the BATCH twin's expected cardinality
-    # (filesize := n_done_batch, written := n_rej_batch — computed
-    # independently of the stream), pinning the manifest's cardinality. A
-    # stream that silently drops rows now changes the recorded row count
-    # AND flips this row's batch_consistent via counts_ok — and since
-    # round 11 the oracle hash-checks the same counts a third way.
     summary = counts.select(
         F.lit("__summary__").alias("transfer_id"),
         F.lit("summary").alias("status"),
         F.col("n_done_batch").cast("long").alias("filesize"),
         F.col("n_rej_batch").cast("long").alias("written"),
         F.lit(None).cast("long").alias("n_rejected"),
-        F.col("counts_ok").alias("batch_consistent"),
-    )
-    row_ok = (F.col("status") == F.col("b_status")) & (
-        (F.col("status") != "done")
-        | ((F.col("filesize") == F.col("b_filesize")) & (F.col("written") == F.col("b_written")))
+        (F.col("counts_ok") & F.col("rows_ok")).alias("batch_consistent"),
     )
     return (
-        out.join(expected, "transfer_id", "left")
-        .crossJoin(F.broadcast(counts))
-        .withColumn("batch_consistent", F.coalesce(row_ok, F.lit(False)) & F.col("counts_ok"))
-        .drop("b_filesize", "b_written", "b_status", "counts_ok", "n_done_batch", "n_rej_batch")
+        checked.crossJoin(F.broadcast(counts))
+        .withColumn("batch_consistent", F.col("row_ok") & F.col("counts_ok"))
+        .drop("b_filesize", "b_written", "b_status", "row_ok", "counts_ok", "rows_ok",
+              "n_done_batch", "n_rej_batch")
         .unionByName(summary)
     )
