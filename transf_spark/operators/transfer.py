@@ -325,41 +325,59 @@ def reassembly_ordered_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def accepted_progress(chunks: DataFrame, handshakes: DataFrame) -> tuple[DataFrame, Column]:
-    """The state machine's progress in closed form over a (chunks,
-    handshakes) pair, both keyed by ``transfer_id``:
+def accepted_progress(frame: DataFrame, is_chunk: str, filesize: str) -> tuple[DataFrame, str]:
+    """The state machine's progress in closed form, as window columns over
+    ``frame``. Rows where the SQL predicate ``is_chunk`` holds are TRANSFER
+    chunks (``transfer_id``, ``seq``, ``payload_len``); every other row (a
+    handshake, a manifest row) passes through and receives its transfer's
+    values:
 
     1. duplicate-drop per (transfer, seq) (≈ stop-and-wait re-send
        rejection, `transf_server.cpp:268-273`);
-    2. accepted prefix = rows where row_number-by-seq == seq (a later chunk
-       after a hole is rejected, exactly like the seq verifier);
-    3. ``written_raw`` = sum of accepted payloads, ``n_rejected`` = chunks
-       past the first hole.
+    2. accepted prefix = kept chunks whose rank by seq equals seq (a later
+       chunk after a hole is rejected, exactly like the seq verifier);
+    3. ``written_raw`` = sum of accepted payloads, ``n_rejected`` = kept
+       chunks past the first hole, ``has_chunks`` = the transfer has at
+       least one chunk row.
 
-    Returns ``handshakes`` inner-joined to those two per-transfer columns,
-    and the ``written`` Column over that frame: ``written_raw`` clamped to
-    ``[0, filesize]`` (`transf_server.cpp:277-294`). The
-    lower clamp matches the state machine, which clamps every chunk write
-    to >= 0, so a degenerate negative filesize reports written = 0 on both
-    sides. A transfer is done when ``written >= filesize``. The one
-    definition :func:`completion_manifest` and the stateful stream's batch
+    One shuffle, the caller's: ``frame`` must already be partitioned by
+    ``transfer_id`` (``repartition("transfer_id")``). Every window here is
+    keyed by ``transfer_id`` first, so Spark sorts within those partitions
+    and adds no exchange of its own, and a caller unions its handshakes or
+    manifest rows into the same partitioning instead of joining them back
+    (:func:`completion_manifest` runs in 6 Spark jobs where an aggregate
+    joined back to the handshakes ran 8).
+
+    Returns the frame with those three columns added, and the SQL text of
+    ``written``: ``written_raw`` clamped to ``[0, filesize]``, ``filesize``
+    being a SQL expression over the returned frame
+    (`transf_server.cpp:277-294`). The lower clamp matches the state
+    machine, which clamps every chunk write to >= 0, so a degenerate
+    negative filesize reports written = 0 on both sides. A transfer is
+    done when it has chunks and ``written >= filesize``. The one definition
+    :func:`completion_manifest` and the stateful stream's batch
     cross-check share."""
-    w = W.partitionBy("transfer_id").orderBy("seq")
-    acc = (
-        chunks.dropDuplicates(["transfer_id", "seq"])
-        .withColumn("rn", F.row_number().over(w))
-        .groupBy("transfer_id")
-        .agg(
-            F.sum(F.when(F.col("rn") == F.col("seq"), F.col("payload_len")).otherwise(0))
-            .cast("long")
-            .alias("written_raw"),
-            F.sum(F.when(F.col("rn") != F.col("seq"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_rejected"),
-        )
+    chunk = f"coalesce({is_chunk}, false)"
+    by_tid = "OVER (PARTITION BY transfer_id)"
+    kept = frame.selectExpr(
+        "*",
+        f"{chunk} AS _chunk",
+        f"{chunk} AND row_number() OVER "
+        f"(PARTITION BY transfer_id, {chunk}, seq ORDER BY payload_len) = 1 AS _kept",
     )
-    written = F.greatest(F.least(F.col("filesize"), F.col("written_raw")), F.lit(0))
-    return acc.join(handshakes, "transfer_id"), written
+    # rank among kept chunks: one kept row per seq, so the running count
+    # up to and including this seq is its row_number among them
+    ranked = kept.selectExpr(
+        "*", "sum(CAST(_kept AS BIGINT)) OVER (PARTITION BY transfer_id ORDER BY seq) AS _rn"
+    )
+    progress = ranked.selectExpr(
+        *frame.columns,
+        "CAST(sum(CASE WHEN _kept AND _rn = seq THEN payload_len ELSE 0 END) "
+        f"{by_tid} AS BIGINT) AS written_raw",
+        f"count(CASE WHEN _kept AND _rn <> seq THEN 1 END) {by_tid} AS n_rejected",
+        f"max(_chunk) {by_tid} AS has_chunks",
+    )
+    return progress, f"greatest(least({filesize}, written_raw), 0)"
 
 
 @register(
@@ -396,28 +414,29 @@ def completion_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     1. duplicate-drop → accepted prefix → clamped ``written``, the closed
        form of :func:`accepted_progress` over the faulty chunks and the
-       handshakes;
+       handshakes, unioned and partitioned by ``transfer_id`` once; each
+       handshake row of a transfer with chunks is one output row;
     2. status: done (`written >= filesize`, `transf_server.cpp:296-316`),
        else expired when the handshake is older than the GC horizon
        (`transf_server.cpp:78-131`), else pending.
     """
-    c = fixtures.chunks_faulty(spark, sf_dir)
-    h = fixtures.handshakes(spark, sf_dir)
+    c = fixtures.chunks_faulty(spark, sf_dir).select("transfer_id", "seq", "payload_len")
+    h = fixtures.handshakes(spark, sf_dir).selectExpr("transfer_id", "filesize", "ts", "true AS _hs")
     events = fixtures.load_table(spark, sf_dir, "events")
     horizon = events.agg(
         (F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("horizon")
     )
-    progress, written = accepted_progress(c, h.select("transfer_id", "filesize", "ts"))
+    both = c.unionByName(h, allowMissingColumns=True).repartition("transfer_id")
+    progress, written = accepted_progress(both, "_hs IS NULL", "filesize")
     return (
-        progress.crossJoin(F.broadcast(horizon))
-        .select(
+        progress.filter("_hs AND has_chunks")
+        .crossJoin(F.broadcast(horizon))
+        .selectExpr(
             "transfer_id",
             "filesize",
-            written.cast("long").alias("written"),
+            f"CAST({written} AS BIGINT) AS written",
             "n_rejected",
-            F.when(written >= F.col("filesize"), "done")
-            .when(F.col("ts") < F.col("horizon"), "expired")
-            .otherwise("pending")
-            .alias("status"),
+            f"CASE WHEN {written} >= filesize THEN 'done' "
+            "WHEN ts < horizon THEN 'expired' ELSE 'pending' END AS status",
         )
     )
